@@ -5,21 +5,26 @@ the scale extensions the task brief names.
 
 Scale notes (100 TB):
   * exact_dedup: one shuffle on a 16-byte digest; map-side partial agg.
-  * minhash (r7): shingle set, signature and LSH band buckets are one
-    vectorized Arrow pass PER ROW (`minhash_prep`) — zero shuffles
-    before the candidate join; the Python hash kernels (hashlib.md5,
-    pure-Python xxh64) are test-pinned bit-exact twins of the JVM
-    functions, so the md5 family stays end-to-end replayable by the
-    DuckDB oracle.  Banding rows are (id, band, bucket) only; the
-    candidate self-join reads an eagerly checkpointed copy so the prep
-    never runs once per join side.  Verification re-joins only
-    bucket-mates.
-  * simhash: same per-row Arrow shape (md5 family); candidates block
+  * minhash: shingle set, signature and LSH band buckets are one
+    vectorized Arrow pass PER BATCH (`minhash_prep`) — zero shuffles
+    before the candidate join.  A batch's shingles are flattened with
+    per-document offsets and hashed at once (a numpy XXH64 kernel over
+    uint64 lanes, or hashlib.md5 per shingle); the k mins per document
+    are `np.minimum.reduceat` over the offsets.  Both hash families are
+    test-pinned bit-exact twins of the JVM functions, so the md5 family
+    stays end-to-end replayable by the DuckDB oracle.  Banding rows are
+    (id, band, bucket) only; the candidate self-join reads an eagerly
+    checkpointed copy so the prep never runs once per join side.
+    Verification re-joins only bucket-mates.
+  * simhash: one per-row Arrow pass (md5 family); candidates block
     on signature quarters (pigeonhole) and verify full hamming.
 """
 
 from __future__ import annotations
 
+import hashlib
+
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -125,61 +130,114 @@ MINHASH_PRIME = 2147483647
 
 
 # ---------------------------------------------------------------------------
-# Pure-Python XXH64 (public algorithm, Collet 2012; same constants as
-# Spark's XxHash64Function) — lets the Arrow-vectorized minhash prep
-# compute the xxhash64 hash family per row without the JVM k-min
-# aggregate.  Bit-equality with F.xxhash64 is pinned by
-# tests/test_dedup_similarity.py over corpus shingles + edge strings.
+# XXH64 (public algorithm, Collet 2012; same constants as Spark's
+# XxHash64Function) as a numpy kernel over uint64 lanes — lets the
+# Arrow-vectorized minhash prep hash a whole batch of shingles without
+# the JVM k-min aggregate.  Bit-equality with F.xxhash64 is pinned by
+# tests/test_dedup_similarity.py over every byte length 0..80 + edge
+# strings.
 # ---------------------------------------------------------------------------
 
-_XP1 = 0x9E3779B185EBCA87
-_XP2 = 0xC2B2AE3D27D4EB4F
-_XP3 = 0x165667B19E3779F9
-_XP4 = 0x85EBCA77C2B2AE63
-_XP5 = 0x27D4EB2F165667C5
+_XP1 = np.uint64(0x9E3779B185EBCA87)
+_XP2 = np.uint64(0xC2B2AE3D27D4EB4F)
+_XP3 = np.uint64(0x165667B19E3779F9)
+_XP4 = np.uint64(0x85EBCA77C2B2AE63)
+_XP5 = np.uint64(0x27D4EB2F165667C5)
 _M64 = (1 << 64) - 1
+
+
+def _rotl(x, r: int):
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def _round(acc, lane):
+    return _rotl(acc + lane * _XP2, 31) * _XP1
+
+
+def xxh64_words(words: np.ndarray, n: int, seeds: np.ndarray) -> np.ndarray:
+    """XXH64 of m inputs of the SAME byte length ``n``, one per lane.
+
+    ``words``: (m, ≥ceil(n/8)) little-endian uint64 words of the
+    zero-padded inputs; ``seeds``: (m,) uint64.  → (m,) uint64.  Every
+    read offset before the 4-byte tail is a multiple of 8, so the tail
+    word and bytes are the low bits of one padded word; uint64 multiply
+    and add wrap natively, which is the algorithm's mod-2⁶⁴ arithmetic."""
+    i = 0
+    if n >= 32:
+        v1 = seeds + _XP1 + _XP2
+        v2 = seeds + _XP2
+        v3 = seeds
+        v4 = seeds - _XP1
+        for i in range(0, (n // 32) * 4, 4):
+            v1 = _round(v1, words[:, i])
+            v2 = _round(v2, words[:, i + 1])
+            v3 = _round(v3, words[:, i + 2])
+            v4 = _round(v4, words[:, i + 3])
+        i = (n // 32) * 4
+        h = _rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)
+        for v in (v1, v2, v3, v4):
+            h = (h ^ _round(np.uint64(0), v)) * _XP1 + _XP4
+    else:
+        h = seeds + _XP5
+    h = h + np.uint64(n)
+    while (i + 1) * 8 <= n:
+        h = _rotl(h ^ _round(np.uint64(0), words[:, i]), 27) * _XP1 + _XP4
+        i += 1
+    done, shift = i * 8, 0
+    if done + 4 <= n:
+        h = _rotl(h ^ ((words[:, i] & np.uint64(0xFFFFFFFF)) * _XP1), 23) * _XP2 + _XP3
+        done, shift = done + 4, 32
+    for _ in range(n - done):
+        byte = (words[:, i] >> np.uint64(shift)) & np.uint64(0xFF)
+        h = _rotl(h ^ (byte * _XP5), 11) * _XP1
+        shift += 8
+    h = h ^ (h >> np.uint64(33))
+    h = h * _XP2
+    h = h ^ (h >> np.uint64(29))
+    h = h * _XP3
+    return h ^ (h >> np.uint64(32))
+
+
+def xxh64_many(items: list, seeds) -> np.ndarray:
+    """XXH64 of each ``bytes`` in ``items`` (uint64 ``seeds``: one per
+    item, or one for all) → (len(items),) uint64.  Inputs are grouped by
+    byte length; each group is one :func:`xxh64_words` call."""
+    m = len(items)
+    seeds = np.broadcast_to(np.asarray(seeds, dtype=np.uint64), (m,))
+    out = np.empty(m, dtype=np.uint64)
+    if not m:
+        return out
+    lens = np.fromiter(map(len, items), dtype=np.int64, count=m)
+    order = np.argsort(lens, kind="stable")
+    blob = np.frombuffer(b"".join([items[j] for j in order]), dtype=np.uint8)
+    slens = lens[order]
+    cuts = np.flatnonzero(np.diff(slens)) + 1
+    pos = 0
+    for lo, hi in zip(np.r_[0, cuts], np.r_[cuts, m]):
+        n, g = int(slens[lo]), hi - lo
+        padded = np.zeros((g, max(-(-n // 8), 1) * 8), dtype=np.uint8)
+        padded[:, :n] = blob[pos : pos + g * n].reshape(g, n)
+        pos += g * n
+        idx = order[lo:hi]
+        out[idx] = xxh64_words(padded.view("<u8"), n, seeds[idx])
+    return out
 
 
 def xxh64(data: bytes, seed: int = 42) -> int:
     """XXH64 of ``data`` — returns the SIGNED 64-bit value Spark's
-    ``F.xxhash64`` produces (seed default 42 matches Spark's)."""
-    rotl = lambda x, r: ((x << r) | (x >> (64 - r))) & _M64
-    n = len(data)
-    i = 0
-    if n >= 32:
-        v1 = (seed + _XP1 + _XP2) & _M64
-        v2 = (seed + _XP2) & _M64
-        v3 = seed & _M64
-        v4 = (seed - _XP1) & _M64
-        while i + 32 <= n:
-            v1 = (rotl((v1 + int.from_bytes(data[i : i + 8], "little") * _XP2) & _M64, 31) * _XP1) & _M64
-            v2 = (rotl((v2 + int.from_bytes(data[i + 8 : i + 16], "little") * _XP2) & _M64, 31) * _XP1) & _M64
-            v3 = (rotl((v3 + int.from_bytes(data[i + 16 : i + 24], "little") * _XP2) & _M64, 31) * _XP1) & _M64
-            v4 = (rotl((v4 + int.from_bytes(data[i + 24 : i + 32], "little") * _XP2) & _M64, 31) * _XP1) & _M64
-            i += 32
-        h = (rotl(v1, 1) + rotl(v2, 7) + rotl(v3, 12) + rotl(v4, 18)) & _M64
-        for v in (v1, v2, v3, v4):
-            h ^= (rotl((v * _XP2) & _M64, 31) * _XP1) & _M64
-            h = (h * _XP1 + _XP4) & _M64
-    else:
-        h = (seed + _XP5) & _M64
-    h = (h + n) & _M64
-    while i + 8 <= n:
-        k = (rotl((int.from_bytes(data[i : i + 8], "little") * _XP2) & _M64, 31) * _XP1) & _M64
-        h = (rotl(h ^ k, 27) * _XP1 + _XP4) & _M64
-        i += 8
-    if i + 4 <= n:
-        h = (rotl(h ^ ((int.from_bytes(data[i : i + 4], "little") * _XP1) & _M64), 23) * _XP2 + _XP3) & _M64
-        i += 4
-    while i < n:
-        h = (rotl(h ^ ((data[i] * _XP5) & _M64), 11) * _XP1) & _M64
-        i += 1
-    h ^= h >> 33
-    h = (h * _XP2) & _M64
-    h ^= h >> 29
-    h = (h * _XP3) & _M64
-    h ^= h >> 32
-    return h - (1 << 64) if h >= (1 << 63) else h
+    ``F.xxhash64`` produces (seed default 42 matches Spark's).  A
+    one-lane :func:`xxh64_many` call."""
+    return int(xxh64_many([data], seed & _M64).view(np.int64)[0])
+
+
+def md5_top60(items: list) -> np.ndarray:
+    """(len(items), 2) int64: the top 60 bits of each big-endian half
+    of md5 over each ``bytes`` in ``items`` — hexdigest[0:15] and
+    [16:31] read as integers, i.e. ``conv(substring(md5(s), 1|17, 15),
+    16, 10)`` on Spark and DuckDB."""
+    digests = b"".join([hashlib.md5(e).digest() for e in items])
+    halves = np.frombuffer(digests, dtype=">u8").reshape(-1, 2)
+    return (halves >> np.uint64(4)).astype(np.int64)
 
 
 def minhash_perm_coeffs(num_hashes: int, salt: str = "minhash") -> list:
@@ -187,8 +245,6 @@ def minhash_perm_coeffs(num_hashes: int, salt: str = "minhash") -> list:
     permutation family g_j(x) = (a_j·h1 + b_j·h2) mod p.  Derived from
     md5 of the salt+index so Spark and the DuckDB oracle share the
     identical constants without any runtime randomness."""
-    import hashlib
-
     out = []
     for j in range(num_hashes):
         a = int(hashlib.md5(f"{salt}:{j}:a".encode()).hexdigest(), 16) % (MINHASH_PRIME - 1) + 1
@@ -274,25 +330,25 @@ def minhash_prep(
 ) -> DataFrame:
     """→ (id, sh: array<string>, buckets: array<…>) — shingle set,
     minhash signature and LSH band buckets computed in ONE Arrow pass,
-    per row, with zero shuffles.
+    per batch, with zero shuffles.
 
     Why: every shingle of a document already lives in one row, so the
     explode → groupBy(id) k-min aggregate only re-groups what was never
     apart — and its k-wide generated aggregate costs ~6 s of
     codegen+JIT per session before the first row flows (measured on a
-    10-row input).  Here the per-row k mins are one numpy
-    (k × n_shingles) matmul-mod, and the hash families are bit-exact
-    twins of the JVM/oracle functions: hashlib.md5 ≡ F.md5 ≡ DuckDB
-    md5, and :func:`xxh64` ≡ F.xxhash64 (pinned by tests).  buckets[b]
-    is the band-b bucket (md5 hex string / xxhash64 long), identical to
-    minhash_lsh_candidates' banding values."""
-    import numpy as np
-
+    10-row input).  Here each Arrow batch is hashed as a whole: the
+    batch's shingles are flattened with per-document offsets, hashed in
+    one pass (the :func:`xxh64_many` numpy kernel, or hashlib.md5 per
+    shingle), and the k mins per document are one
+    ``np.minimum.reduceat`` over the offsets per permutation.  The hash
+    families are bit-exact twins of the JVM/oracle functions:
+    hashlib.md5 ≡ F.md5 ≡ DuckDB md5, and the kernel ≡ F.xxhash64
+    (pinned by tests).  buckets[b] is the band-b bucket (md5 hex string
+    / xxhash64 long), identical to minhash_lsh_candidates' banding
+    values.  NULL text → NULL sh and buckets."""
     rows_per_band = num_hashes // bands
     assert bands * rows_per_band == num_hashes
     coeffs = minhash_perm_coeffs(num_hashes)
-    A = np.array([a for a, _ in coeffs], dtype=np.int64)[:, None]
-    B = np.array([b for _, b in coeffs], dtype=np.int64)[:, None]
     p = MINHASH_PRIME
     n = shingle_n
     md5_family = hash_family == "md5"
@@ -302,57 +358,59 @@ def minhash_prep(
     bucket_type = "string" if md5_family else "bigint"
     schema = f"id {id_type}, sh array<string>, buckets array<{bucket_type}>"
 
+    def grams(s: str) -> list:
+        toks = s.split(" ")
+        m = max(len(toks) - n, 0) + 1
+        return list(dict.fromkeys(" ".join(toks[i : i + n]) for i in range(m)))
+
+    def hash_pairs(flat: list):
+        """(h1, h2) int64 arrays in [0, p) for every shingle."""
+        enc = [g.encode("utf-8") for g in flat]
+        if md5_family:
+            h = md5_top60(enc) % p
+            return h[:, 0], h[:, 1]
+        # F.xxhash64(s, lit(j)) = XXH64 of int j's 4 LE bytes seeded with
+        # XXH64(s, 42); h_j is its SIGNED value floor-mod p (= F.pmod)
+        base = xxh64_many(enc, 42)
+        lane = np.zeros((len(enc), 1), dtype=np.uint64)
+        out = []
+        for j in (1, 2):
+            lane[:] = j
+            out.append(xxh64_words(lane, 4, base).view(np.int64) % p)
+        return out
+
+    def band_buckets(sig: np.ndarray) -> list:
+        """(docs, k) signatures → per-document list of band buckets."""
+        keys = [
+            ",".join(map(str, row[b * rows_per_band : (b + 1) * rows_per_band]))
+            for row in sig.tolist()
+            for b in range(bands)
+        ]
+        if md5_family:
+            flat = [hashlib.md5(k.encode("utf-8")).hexdigest() for k in keys]
+        else:
+            flat = xxh64_many([k.encode("utf-8") for k in keys], 42).view(np.int64).tolist()
+        return [flat[i : i + bands] for i in range(0, len(flat), bands)]
+
     def gen(batches):
-        import hashlib
-
-        seed1 = (1).to_bytes(4, "little")
-        seed2 = (2).to_bytes(4, "little")
-
-        def hash_pair(g: str):
-            if md5_family:
-                m = hashlib.md5(g.encode("utf-8")).hexdigest()
-                return int(m[0:15], 16) % p, int(m[16:31], 16) % p
-            base = xxh64(g.encode("utf-8"), 42) & _M64
-            return xxh64(seed1, base) % p, xxh64(seed2, base) % p
-
-        def bucket(key: str):
-            if md5_family:
-                return hashlib.md5(key.encode("utf-8")).hexdigest()
-            return xxh64(key.encode("utf-8"), 42)
-
         for pdf in batches:
-            shs, bks = [], []
-            for s in pdf["nt"]:
-                if s is None:
-                    shs.append(None)
-                    bks.append(None)
-                    continue
-                toks = s.split(" ")
-                m = max(len(toks) - n, 0) + 1
-                g = list(
-                    dict.fromkeys(" ".join(toks[i : i + n]) for i in range(m))
-                )
-                pairs = [hash_pair(x) for x in g]
-                H1 = np.array([h1 for h1, _ in pairs], dtype=np.int64)
-                H2 = np.array([h2 for _, h2 in pairs], dtype=np.int64)
-                sig = ((A * H1 + B * H2) % p).min(axis=1)
-                bks.append(
-                    [
-                        bucket(
-                            ",".join(
-                                str(x)
-                                for x in sig[b * rows_per_band : (b + 1) * rows_per_band]
-                            )
-                        )
-                        for b in range(bands)
-                    ]
-                )
-                shs.append(g)
-            import pandas as _pd
-
-            yield _pd.DataFrame(
-                {"id": pdf["id"], "sh": shs, "buckets": bks}
+            shs = [None if s is None else grams(s) for s in pdf["nt"]]
+            present = [i for i, g in enumerate(shs) if g is not None]
+            counts = np.fromiter(
+                (len(shs[i]) for i in present), dtype=np.int64, count=len(present)
             )
+            # every present document has ≥ 1 shingle (empty text → [""]),
+            # so the offsets are strictly increasing as reduceat needs
+            starts = np.cumsum(counts) - counts
+            bks = [None] * len(shs)
+            if present:
+                H1, H2 = hash_pairs([g for i in present for g in shs[i]])
+                sig = np.empty((len(present), num_hashes), dtype=np.int64)
+                for j, (a, b) in enumerate(coeffs):
+                    sig[:, j] = np.minimum.reduceat((a * H1 + b * H2) % p, starts)
+                for i, bk in zip(present, band_buckets(sig)):
+                    bks[i] = bk
+            yield pd.DataFrame({"id": pdf["id"], "sh": shs, "buckets": bks})
 
     base = spread(
         df.select(
@@ -433,9 +491,9 @@ def minhash_dedup(
     Jaccard verification over shingle sets → (id_a, id_b, jaccard).
     Verification joins the shingle arrays back only for candidates.
 
-    Shape (r7): shingles + signature + band buckets come from ONE
-    Arrow pass (:func:`minhash_prep` — per-row numpy k-mins, bit-exact
-    hash twins), eagerly localCheckpointed so the banding self-join's
+    Shape: shingles + signature + band buckets come from ONE
+    Arrow pass (:func:`minhash_prep` — batch-wide hashing and numpy
+    k-mins, bit-exact hash twins), eagerly localCheckpointed so the banding self-join's
     two sides and BOTH verification join sides read stored blocks
     instead of re-running the pipeline (the old explode → k-min-agg →
     self-join plan evaluated the whole signature chain once per join
@@ -509,19 +567,15 @@ def simhash_signatures_md5(
     groupBy(id) with `bits` conditional ±1 sums only re-grouped
     per-row data, and its 60-wide generated aggregate carried the same
     multi-second codegen/JIT constant the minhash aggregate did.
-    hashlib.md5 is the bit-exact twin of F.md5/conv (pinned by the
+    :func:`md5_top60` is the bit-exact twin of F.md5/conv (pinned by the
     simhash_near_dup oracle row and test_simhash_md5_prep_parity);
     the per-bit majority is one numpy (n_tokens × bits) reduction."""
     assert bits <= 60
-    import numpy as np
-
     id_type = dict(
         (f.name, f.dataType.simpleString()) for f in df.schema.fields
     )[id_col]
 
     def gen(batches):
-        import hashlib
-
         shifts = np.arange(bits, dtype=np.int64)
         for pdf in batches:
             sigs = []
@@ -529,19 +583,11 @@ def simhash_signatures_md5(
                 if s is None:
                     sigs.append(None)
                     continue
-                toks = list(dict.fromkeys(s.split(" ")))
-                H = np.array(
-                    [
-                        int(hashlib.md5(w.encode("utf-8")).hexdigest()[:15], 16)
-                        for w in toks
-                    ],
-                    dtype=np.int64,
-                )
+                toks = dict.fromkeys(s.split(" "))
+                H = md5_top60([w.encode("utf-8") for w in toks])[:, 0]
                 votes = (((H[:, None] >> shifts) & 1) * 2 - 1).sum(axis=0)
                 sigs.append(int(((votes > 0).astype(np.int64) << shifts).sum()))
-            import pandas as _pd
-
-            yield _pd.DataFrame({"id": pdf["id"], "simhash": sigs})
+            yield pd.DataFrame({"id": pdf["id"], "simhash": sigs})
 
     base = spread(
         df.select(

@@ -171,15 +171,17 @@ def winnow_fingerprints(
     minima run in ONE Arrow pass — the former transform/slice chain
     evaluated one interpreted md5 per CHARACTER plus a window-slice
     array_min per position (CodegenFallback throughout).
-    hashlib.md5(int hex) is the bit-exact twin of
-    conv(substr(md5(…),1,15),16,10); Spark's substring/length count
-    code points exactly as Python slicing does; the rolling minimum is
-    a numpy sliding-window reduction.  Parity pinned by
+    Each batch's distinct k-grams are hashed once and scattered back to
+    their positions; :func:`md5_top60` is the bit-exact twin of
+    conv(substr(md5(…),1,15),16,10); Spark's
+    substring/length count code points exactly as Python slicing does;
+    the rolling minimum is one numpy sliding-window reduction over the
+    batch.  Parity pinned by
     tests/test_dedup_similarity.py::test_winnow_prep_parity and the
     doc_winnow oracle row."""
     import pandas as pd
 
-    from ont_d2rq_spark.operators.dedup import spread
+    from ont_d2rq_spark.operators.dedup import md5_top60, spread
 
     norm = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
     # per-char k-gram hashing is CPU-explosive: spread an under-split
@@ -192,25 +194,25 @@ def winnow_fingerprints(
     ]
 
     def gen(batches):
-        import hashlib
-
         import numpy as np
 
         for pdf in batches:
-            fps = []
-            for s in pdf["nt"]:
-                H = np.array(
-                    [
-                        int(
-                            hashlib.md5(s[i : i + k].encode("utf-8")).hexdigest()[:15],
-                            16,
-                        )
-                        for i in range(len(s) - k + 1)
-                    ],
-                    dtype=np.int64,
-                )
-                mins = np.lib.stride_tricks.sliding_window_view(H, window).min(axis=1)
-                fps.append([int(x) for x in dict.fromkeys(mins.tolist())])
+            if pdf.empty:
+                continue
+            grams = [[s[i : i + k] for i in range(len(s) - k + 1)] for s in pdf["nt"]]
+            # hash each distinct k-gram of the batch once, scatter back
+            codes, uniq = pd.factorize(
+                pd.Series([g for gs in grams for g in gs], dtype=object)
+            )
+            H = md5_top60([u.encode("utf-8") for u in uniq])[codes, 0]
+            # window minima over the concatenation; document d's minima
+            # are the windows that start inside its own k-grams
+            mins = np.lib.stride_tricks.sliding_window_view(H, window).min(axis=1)
+            fps, start = [], 0
+            for gs in grams:
+                own = mins[start : start + len(gs) - window + 1]
+                fps.append(list(dict.fromkeys(own.tolist())))
+                start += len(gs)
             yield pd.DataFrame({"id": pdf["id"], "fps": fps})
 
     return (

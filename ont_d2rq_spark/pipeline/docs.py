@@ -59,20 +59,20 @@ HUB_EXTRA = 120  # extra mention spans per hub
 def _parquet_rows(path: str, spark: SparkSession) -> int:
     """Exact row count from parquet footer metadata — driver-side file
     reads only, no Spark job (the count() it replaces was
-    metadata-only too, but still cost a job + plan per call).  Falls
-    back to a Spark count for non-local paths."""
-    try:
-        import pyarrow.parquet as pq
+    metadata-only too, but still cost a job + plan per call).  A
+    directory is counted over its whole tree, so nested and
+    partitioned layouts count every file (pyarrow.dataset skips the
+    ``_SUCCESS`` / ``.crc`` side files as Spark does).  Falls back to a
+    Spark count for non-local paths."""
+    if os.path.exists(path):
+        try:
+            import pyarrow.dataset as ds
 
-        if os.path.isdir(path):
-            return sum(
-                pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            )
-        return pq.ParquetFile(path).metadata.num_rows
-    except Exception:
-        return spark.read.parquet(path).count()
+            return ds.dataset(path, format="parquet").count_rows()
+        except Exception:
+            pass
+    return spark.read.parquet(path).count()
+
 
 def synthesize_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents(doc_id,text) → docs_interleaved(doc_id, spans).

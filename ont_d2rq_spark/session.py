@@ -59,12 +59,36 @@ def ship_package(spark: SparkSession) -> None:
     spark._ont_d2rq_shipped = True
 
 
+def default_cpus() -> int:
+    """Cores this process may run on (its affinity mask, which a
+    container or taskset narrows below the host's core count)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API on this platform
+        return os.cpu_count() or 1
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """min(available RAM / 4, 48g) as a ``spark.driver.memory`` value —
+    a quarter of what the machine has free leaves room for the Python
+    workers and the page cache.  Never below 512m: Spark refuses to
+    start a driver with less than ~450 MB of heap."""
+    cap_mb = 48 << 10
+    try:
+        with open(meminfo) as f:
+            fields = dict(line.split(":", 1) for line in f)
+        avail_mb = int(fields["MemAvailable"].split()[0]) // 1024
+    except (OSError, KeyError, ValueError):
+        return f"{cap_mb}m"
+    return f"{max(512, min(avail_mb // 4, cap_mb))}m"
+
+
 def get_spark(
     app: str = "ont_d2rq_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or default_cpus())
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
@@ -78,7 +102,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # straggler mitigation for CLUSTER deployments: one externally

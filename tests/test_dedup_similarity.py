@@ -376,3 +376,97 @@ def test_winnow_prep_parity(spark):
     )
     new = TX.winnow_fingerprints(docs, k=k, window=window)
     assert old.exceptAll(new).count() == 0 and new.exceptAll(old).count() == 0
+
+
+def _utf8_of_length(n: int, alphabet: str) -> str:
+    """A string of exactly ``n`` UTF-8 bytes drawn from ``alphabet``
+    (1- to 4-byte characters), padded with ASCII."""
+    out, size = [], 0
+    for i in range(n):
+        ch = alphabet[i % len(alphabet)]
+        if size + len(ch.encode("utf-8")) > n:
+            break
+        out.append(ch)
+        size += len(ch.encode("utf-8"))
+    return "".join(out) + "a" * (n - size)
+
+
+def test_xxh64_kernel_matches_spark_every_length(spark):
+    """The numpy XXH64 kernel equals F.xxhash64 for every byte length
+    0..80 (crossing each 4-, 8- and 32-byte boundary), for ASCII and
+    multibyte UTF-8, under the default seed 42 and under per-lane seeds
+    on both sides of 2^63.  F.xxhash64(long x, s) hashes s seeded with
+    XXH64(x's 8 LE bytes, 42); x = 0 and x = 3 give one seed above and
+    one below 2^63."""
+    xs = (0, 3)
+    seeds = D.xxh64_many([x.to_bytes(8, "little") for x in xs], 42)
+    assert seeds[0] >= 2**63 > seeds[1]
+    cases = [
+        _utf8_of_length(n, alphabet)
+        for n in range(81)
+        for alphabet in ("abcdefgh", "ü€😀a")
+    ]
+    assert {len(c.encode("utf-8")) for c in cases} == set(range(81))
+    rows = (
+        spark.createDataFrame([(c,) for c in cases], "s string")
+        .select(
+            "s",
+            F.xxhash64("s").alias("h42"),
+            *[F.xxhash64(F.lit(x).cast("long"), "s").alias(f"x{x}") for x in xs],
+        )
+        .collect()
+    )
+    enc = [r["s"].encode("utf-8") for r in rows]
+    signed = lambda a: a.view("int64").tolist()
+    assert signed(D.xxh64_many(enc, 42)) == [r["h42"] for r in rows]
+    assert [D.xxh64(e) for e in enc] == [r["h42"] for r in rows]
+    for x, seed in zip(xs, seeds):
+        lanes = D.xxh64_many(enc, [seed] * len(enc))
+        assert signed(lanes) == [r[f"x{x}"] for r in rows]
+
+
+def test_minhash_prep_batch_null_and_empty_rows(spark):
+    """One Arrow batch holding a NULL-text and an empty-text row between
+    real documents: NULL → NULL sh/buckets, empty → the single shingle
+    "" with its own buckets, and the rows after them keep their own
+    signatures (a per-document reference catches any offset slip)."""
+    texts = [
+        "alpha beta gamma delta epsilon",
+        None,
+        "",
+        "one two three four five six seven",
+        "red green blue",
+        "solo",
+    ]
+    rows = list(enumerate(texts))
+    p = spark.sparkContext.defaultParallelism
+    # all rows in partition 0, the others empty: already split enough
+    # for spread() to leave it alone, so the rows form one batch
+    rdd = spark.sparkContext.parallelize(range(p), p).flatMap(
+        lambda i: rows if i == 0 else []
+    )
+    df = spark.createDataFrame(rdd, "doc_id bigint, text string")
+    got = {r["id"]: r for r in D.minhash_prep(df).collect()}
+
+    coeffs = D.minhash_perm_coeffs(64)
+    q = D.MINHASH_PRIME
+
+    def reference(nt):
+        toks = nt.split(" ")
+        m = max(len(toks) - 3, 0) + 1
+        sh = list(dict.fromkeys(" ".join(toks[i : i + 3]) for i in range(m)))
+        pairs = []
+        for g in sh:
+            base = D.xxh64(g.encode("utf-8")) & D._M64
+            pairs.append(tuple(D.xxh64(j.to_bytes(4, "little"), base) % q for j in (1, 2)))
+        sig = [min((a * h1 + b * h2) % q for h1, h2 in pairs) for a, b in coeffs]
+        keys = [",".join(map(str, sig[b * 4 : b * 4 + 4])) for b in range(16)]
+        return sh, [D.xxh64(k.encode("utf-8")) for k in keys]
+
+    assert set(got) == set(range(len(texts)))
+    assert got[1]["sh"] is None and got[1]["buckets"] is None
+    assert got[2]["sh"] == [""]
+    for i, t in enumerate(texts):
+        if t is not None:
+            sh, buckets = reference(t)
+            assert (got[i]["sh"], got[i]["buckets"]) == (sh, buckets), i

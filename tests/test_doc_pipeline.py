@@ -104,3 +104,17 @@ def test_materialize_partitioned_by_pred(spark, tmp_path, interleaved):
     assert len(parts) >= 2  # mentions + sameAs
     # dedup happened
     assert back.count() == back.dropDuplicates(["subj", "pred", "obj"]).count()
+
+
+def test_parquet_rows_counts_partitioned_tree(spark, tmp_path):
+    """A two-level partitioned directory keeps its rows in leaf
+    directories; the footer count must find every one of them (and skip
+    Spark's _SUCCESS marker), matching Spark's own count."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pa.table({"a": [1, 1, 2, 2, 2], "b": ["x", "y", "x", "y", "y"], "v": range(5)})
+    root = tmp_path / "nested"
+    pq.write_to_dataset(t, str(root), partition_cols=["a", "b"])
+    (root / "_SUCCESS").write_text("")
+    assert P._parquet_rows(str(root), spark) == 5 == spark.read.parquet(str(root)).count()
