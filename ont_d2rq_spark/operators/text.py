@@ -200,7 +200,10 @@ def winnow_fingerprints(
             if pdf.empty:
                 continue
             grams = [[s[i : i + k] for i in range(len(s) - k + 1)] for s in pdf["nt"]]
-            # hash each distinct k-gram of the batch once, scatter back
+            # hash each distinct k-gram of the batch once, scatter back:
+            # the repo's corpora repeat most 8-grams (3-19 % distinct per
+            # batch); on text with no repeats this costs ~25 % over
+            # hashing every k-gram
             codes, uniq = pd.factorize(
                 pd.Series([g for gs in grams for g in gs], dtype=object)
             )

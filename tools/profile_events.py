@@ -28,31 +28,18 @@ def main():
     q = sys.argv[1]
     shutil.rmtree(EVDIR, ignore_errors=True)
     os.makedirs(EVDIR, exist_ok=True)
-    os.environ["SPARK_GRAFT_CPUS"] = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     from pyspark.sql import SparkSession
 
-    from ont_d2rq_spark.session import get_spark, ship_package
+    from ont_d2rq_spark.session import (
+        default_cpus,
+        default_driver_memory,
+        ship_package,
+    )
 
-    # mirror get_spark config + event log
-    builder_patch = {
-        "spark.eventLog.enabled": "true",
-        "spark.eventLog.dir": EVDIR,
-    }
-    import ont_d2rq_spark.session as sess
-
-    orig = sess.get_spark
-
-    def patched(app="x", master=None, shuffle_partitions=None):
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        b = SparkSession.builder
-        for k, v in builder_patch.items():
-            b = b.config(k, v)
-        return orig(app, master or f"local[{cpus}]", shuffle_partitions)
-
-    SparkSession.builder = SparkSession.builder
-    # simplest: construct session ourselves with event log then reuse
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    # mirror get_spark's config (same env overrides and defaults) plus
+    # the event log
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or default_cpus())
     b = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(f"prof_{q}")
@@ -62,7 +49,10 @@ def main():
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "48g")
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.eventLog.enabled", "true")
