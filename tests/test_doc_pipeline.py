@@ -118,3 +118,118 @@ def test_parquet_rows_counts_partitioned_tree(spark, tmp_path):
     pq.write_to_dataset(t, str(root), partition_cols=["a", "b"])
     (root / "_SUCCESS").write_text("")
     assert P._parquet_rows(str(root), spark) == 5 == spark.read.parquet(str(root)).count()
+
+
+# -- run_stage: one write job per stage, manifests from the write pass ------
+
+STAGES = ["docs_interleaved", "mentions", "entity_links", "raw_triples",
+          "canonical_map", "kg_triples"]
+
+
+@pytest.fixture(scope="module")
+def kg_root(spark, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("kg") / "ck")
+    final = P.build_kg(spark, SF, root=root)
+    return root, final
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run fn under a job group; → (its result, Spark jobs it launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_run_stage_shuffle_free_stage_is_one_job(spark, tmp_path):
+    from ont_d2rq_spark.checkpoint import run_stage
+
+    root = str(tmp_path / "ck")
+    out, jobs = _jobs_in_group(spark, "ck-one-job", lambda: run_stage(
+        spark, root, "s", lambda: spark.range(0, 1000, 1, 4).withColumn("v", F.col("id") * 2)))
+    assert jobs == 1
+    assert out.count() == 1000
+
+
+def test_run_stage_manifests_match_stored_rows(spark, kg_root):
+    from ont_d2rq_spark.checkpoint import read_lineage, read_metrics
+
+    root, _ = kg_root
+    for stage in STAGES:
+        n = spark.read.parquet(f"{root}/{stage}/data").count()
+        lineage = read_lineage(spark, root, stage)
+        assert lineage.agg(F.sum("rows_out")).first()[0] == n, stage
+        assert {r[0] for r in lineage.select("stage").collect()} == {stage}
+        m = read_metrics(spark, root, stage)
+        col = "n_triples" if stage == "kg_triples" else "rows"
+        assert m.agg(F.sum(col)).first()[0] == n, stage
+
+
+def test_run_stage_manifest_schemas(spark, kg_root):
+    from ont_d2rq_spark.checkpoint import read_lineage, read_metrics
+
+    root, _ = kg_root
+    for stage in STAGES:
+        assert read_lineage(spark, root, stage).dtypes == [
+            ("partition_id", "int"), ("rows_out", "bigint"), ("stage", "string")]
+        want = ([("pred", "string"), ("n_triples", "bigint")] if stage == "kg_triples"
+                else [("rows", "bigint"), ("stage", "string")])
+        assert read_metrics(spark, root, stage).dtypes == want, stage
+
+
+def test_run_stage_returns_plain_read_schema(spark, tmp_path, kg_root, interleaved):
+    """The read-back skips schema inference; its schema must still be
+    the one a plain read of data/ infers (nullability, nesting, order)."""
+    from ont_d2rq_spark.checkpoint import run_stage
+
+    root, final = kg_root
+    assert final.schema == spark.read.parquet(f"{root}/kg_triples/data").schema
+    frames = {
+        "non_null": lambda: spark.range(10).withColumn(
+            "s", F.struct(F.col("id").alias("a"), F.lit("x").alias("b"))),
+        "nested": lambda: interleaved,
+    }
+    for stage, compute in frames.items():
+        out = run_stage(spark, str(tmp_path), stage, compute)
+        assert out.schema == spark.read.parquet(f"{tmp_path}/{stage}/data").schema, stage
+
+
+def test_run_stage_empty_stage_commits_and_resumes(spark, tmp_path):
+    from ont_d2rq_spark.checkpoint import read_lineage, read_metrics, run_stage
+
+    root = str(tmp_path / "ck")
+    out = run_stage(spark, root, "empty", lambda: spark.range(100).filter("id < 0"))
+    assert out.count() == 0
+    assert read_lineage(spark, root, "empty").agg(F.sum("rows_out")).first()[0] == 0
+    assert read_metrics(spark, root, "empty").first()["rows"] == 0
+
+    def boom():
+        raise AssertionError("a committed stage must not recompute")
+
+    again = run_stage(spark, root, "empty", boom)
+    assert again.count() == 0 and again.columns == ["id"]
+
+
+def test_run_stage_crash_in_forced_rerun_recomputes(spark, tmp_path):
+    """A force re-run that dies mid-write must not leave the previous
+    run's commit marker behind: the next resume has to recompute."""
+    from ont_d2rq_spark.checkpoint import run_stage
+
+    root = str(tmp_path / "ck")
+    good = lambda: spark.range(0, 100, 1, 4)  # noqa: E731
+    assert run_stage(spark, root, "s", good).count() == 100
+
+    def crashing():
+        return spark.range(0, 100, 1, 4).withColumn(
+            "id", F.when(F.col("id") == 97, F.raise_error(F.lit("boom"))).otherwise(F.col("id")))
+
+    with pytest.raises(Exception, match="boom"):
+        run_stage(spark, root, "s", crashing, force=True)
+    resumed = run_stage(spark, root, "s", good)
+    assert resumed.count() == 100
+    assert sorted(r[0] for r in resumed.collect()) == list(range(100))

@@ -56,6 +56,15 @@ def test_closure_from_broadcast_guarded(spark):
     plan2 = probe.join(capped, "dst")._jdf.queryExecution().analyzed().toString()
     assert "ResolvedHint" not in plan2
 
+    # the cap compares the FULL reach count (all rounds summed before the
+    # converged round returns): 6 reached nodes keep the hint at cap 6
+    def hinted(cap):
+        out = closure_from(e, "n0", broadcast_rows=cap)
+        assert out.count() == 6
+        return "ResolvedHint" in probe.join(out, "dst")._jdf.queryExecution().analyzed().toString()
+
+    assert hinted(6) and not hinted(5)
+
 
 def test_bridge_df_cache_bounded(spark):
     """Replaced bridge variants (fresh id(cb) per call) must not grow
