@@ -40,6 +40,14 @@ from ont_d2rq_spark.compiler.relation import (
     _qualify,
 )
 from ont_d2rq_spark.mapping.model import Mapping
+from ont_d2rq_spark.sparql_expr import (
+    COMPANIONS as _COMPANION_SUFFIXES,
+    as_tree,
+    companion_default,
+    compile_expr,
+    frame_resolver,
+    split_companion,
+)
 
 
 class _Prune(Exception):
@@ -137,9 +145,6 @@ def _norm_dt(dt: Optional[str]) -> Optional[str]:
     datatype() FILTER builtin already maps plain → xsd:string, so
     typed-literal unification must treat the two as identical too."""
     return None if dt == _XSD_STRING else dt
-
-
-_COMPANION_SUFFIXES = ("__dt", "__lang", "__islit")
 
 
 def _triple_frame_single(tdf: DataFrame, s, p, o, swap: bool = False, pred_filter=None):
@@ -436,58 +441,26 @@ def bgp_join_order(patterns, pat_vars, closure_idxs=frozenset()) -> list:
     return order
 
 
-_COMP_TOKEN = re.compile(r"\b\w+?__(?:dt|lang|islit)\b")
-
-_STR_CONST = re.compile(r"'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\"")
-
-
-def _mask_strings(text: str) -> tuple[str, list[str]]:
-    """Replace quoted SQL string constants with \\x00N\\x00 placeholders
-    so textual token rewrites can never corrupt a literal's content
-    (same discipline as sparql._rewrite_builtins: a variable named
-    `label` must not be rewritten inside `'see label'`)."""
-    parts: list[str] = []
-
-    def repl(m):
-        parts.append(m.group(0))
-        return f"\x00{len(parts) - 1}\x00"
-
-    return _STR_CONST.sub(repl, text), parts
-
-
-def _unmask_strings(text: str, parts: list[str]) -> str:
-    return re.sub(r"\x00(\d+)\x00", lambda m: parts[int(m.group(1))], text)
-
-
-def _comp_default(tok: str) -> str:
-    """SQL literal an absent companion column stands for: an untyped,
-    non-literal binding (false islit, NULL datatype/lang)."""
-    return "false" if tok.endswith("__islit") else "CAST(NULL AS STRING)"
-
-
-def _rewrite_slice_filter(f: str, compat, m, left_cols, right_cols) -> str:
-    """Rewrite a merged-solution filter for a slice where the LEFT side
-    is known NULL on exactly the compat vars in ``m``: a bare var token
+def _slice_resolver(compat, m, left_cols, right_cols):
+    """Merged-solution filter scope for a slice where the LEFT side is
+    known NULL on exactly the compat vars in ``m``: a compat var
     resolves to the adopting side's column (``__lj_<c>`` when the left
-    binding is NULL, else the left column), companion tokens to that
+    binding is NULL, else the left column), its companions to that
     side's copy — or the untyped-binding default when the column is
-    absent (subject-position vars carry no companions).  String
-    constants are masked first so a variable name inside a quoted
-    literal is never rewritten."""
-    f, _strs = _mask_strings(f)
-    for c in compat:
-        f = re.sub(rf"\b{re.escape(c)}\b", "\x01M\x01", f)
-        for suf in _COMPANION_SUFFIXES:
-            tok = f"{c}{suf}"
-            if c in m:
-                repl = (
-                    f"__lj_{tok}" if f"__lj_{tok}" in right_cols else _comp_default(tok)
-                )
-                f = re.sub(rf"\b{tok}\b", repl, f)
-            elif tok not in left_cols:
-                f = re.sub(rf"\b{tok}\b", _comp_default(tok), f)
-        f = f.replace("\x01M\x01", f"__lj_{c}" if c in m else c)
-    return _unmask_strings(f, _strs)
+    absent (subject-position vars carry no companions)."""
+    plain = frame_resolver(set(left_cols) | set(right_cols))
+
+    def col(name):
+        base, suf = split_companion(name)
+        if base not in compat:
+            return plain(name)
+        if base in m:
+            if suf is None or f"__lj_{name}" in right_cols:
+                return F.col(f"__lj_{name}")
+            return companion_default(name)
+        return F.col(name) if suf is None or name in left_cols else companion_default(name)
+
+    return col
 
 
 def _adopt_slice(out: DataFrame, compat, m) -> DataFrame:
@@ -507,12 +480,7 @@ def _adopt_slice(out: DataFrame, compat, m) -> DataFrame:
             if adopted:
                 out = out.withColumn(lc, F.col(rc))
             elif lc not in out.columns:
-                out = out.withColumn(
-                    lc,
-                    F.lit(False).cast("boolean")
-                    if suf == "__islit"
-                    else F.lit(None).cast("string"),
-                )
+                out = out.withColumn(lc, companion_default(lc))
     return out.drop(*[c for c in out.columns if c.startswith("__lj_")])
 
 
@@ -603,18 +571,17 @@ def _masked_compat_join(
             cond = cond & (F.col(c) == F.col("__lj_" + c))
     if filters:
         # the merged binding is KNOWN per right copy: dispatch the
-        # per-m rewritten filter on the copy tag (Catalyst still
+        # filter compiled for slice m on the copy tag (Catalyst still
         # extracts the equi-keys; the dispatch is a post-join residual)
         disp = F.lit(False)
         for k in range(len(compat) + 1):
             for null_vars in combinations(compat, k):
                 m = set(null_vars)
                 tag = ",".join(sorted(m)) or "-"
+                col = _slice_resolver(compat, m, left_cols, right_cols)
                 fm = F.lit(True)
                 for f in filters:
-                    fm = fm & F.expr(
-                        _rewrite_slice_filter(f, compat, m, left_cols, right_cols)
-                    )
+                    fm = fm & compile_expr(f, col)
                 disp = disp | ((F.col("__cj_tag") == tag) & fm)
         cond = cond & disp
     out = left.join(rx, cond, how)
@@ -625,15 +592,7 @@ def _masked_compat_join(
             rc, lc = f"__lj_{c}{suf}", f"{c}{suf}"
             if rc not in out.columns:
                 continue
-            left_ref = (
-                F.col(lc)
-                if lc in out.columns
-                else (
-                    F.lit(False).cast("boolean")
-                    if suf == "__islit"
-                    else F.lit(None).cast("string")
-                )
-            )
+            left_ref = F.col(lc) if lc in out.columns else companion_default(lc)
             out = out.withColumn(
                 lc, F.when(F.col(c).isNull(), F.col(rc)).otherwise(left_ref)
             )
@@ -704,15 +663,14 @@ def _masked_compat_join_sym(
                     for c in shared:
                         if c not in m and c not in t:
                             cond = cond & (F.col(c) == F.col("__lj_" + c))
+                    # the merged binding is KNOWN per pair: left's value
+                    # unless left-NULL, then right's (which is itself NULL
+                    # in the c-in-t slices — an unbound var in a FILTER
+                    # evaluates to NULL → false, matching the coalesce()
+                    # of the fallback path)
+                    col = _slice_resolver(compat, m, left_cols, right_cols)
                     for f in filters:
-                        # the merged binding is KNOWN per pair: left's
-                        # value unless left-NULL, then right's (which is
-                        # itself NULL in the c-in-t slices — an unbound
-                        # var in a FILTER evaluates to NULL → false,
-                        # matching the coalesce() of the fallback path)
-                        cond = cond & F.expr(
-                            _rewrite_slice_filter(f, compat, m, left_cols, right_cols)
-                        )
+                        cond = cond & compile_expr(f, col)
                     outs.append(_adopt_slice(sl.join(sr, cond, "inner"), compat, m))
     matched = reduce(lambda a, b: a.unionByName(b), outs)
     if not preserve:
@@ -769,6 +727,7 @@ def optional_join(
     the plain shared-variable left join (constant-true condition when
     the domains are disjoint, which preserves left rows against an
     empty right side)."""
+    filters = [as_tree(f) for f in filters]
     shared = [c for c in left.columns if c in right.columns and not _is_companion(c)]
     compat = [c for c in shared if c in maybe_unbound or c in right_maybe]
     right = right.drop(
@@ -778,16 +737,6 @@ def optional_join(
             if _is_companion(c) and c in left.columns and c[: c.rfind("__")] not in compat
         ]
     )
-    # companions referenced by a filter but produced by neither side
-    # default to NULL / false (untyped binding); scan with string
-    # constants masked so a literal like 'x__dt' is never mistaken
-    # for a companion reference
-    for tok in {t for f in filters for t in _COMP_TOKEN.findall(_mask_strings(f)[0])}:
-        if tok not in left.columns and tok not in right.columns:
-            right = right.withColumn(
-                tok,
-                F.lit(False) if tok.endswith("__islit") else F.lit(None).cast("string"),
-            )
     if not filters and not compat:
         if shared:
             return left.join(right, on=shared, how=how)
@@ -822,40 +771,28 @@ def optional_join(
         else:
             cond = cond & (F.col(c) == F.col(rc))
     # group filters evaluate over the MERGED solution (SPARQL LeftJoin
-    # expr): a compat var reference inside the condition means the
-    # adopted value when the left side is unbound — rewrite bare var
-    # tokens to coalesce(left, right) and companion tokens to the
-    # adopting side's copy.  Sentinels keep the three rewrites from
-    # corrupting each other's emitted text.
+    # expr): a compat var means the adopted value when the left side is
+    # unbound — coalesce(left, right) — and its companions the adopting
+    # side's copy; either side may LACK a companion column
+    # (subject-position vars carry none), which then reads as the
+    # untyped-binding default
     right_cols = set(right.columns)
     left_cols = set(left.columns)
+    plain = frame_resolver(left_cols | right_cols)
+
+    def merged(name):
+        base, suf = split_companion(name)
+        if base not in compat:
+            return plain(name)
+        if suf is None:
+            return F.coalesce(F.col(base), F.col(f"__lj_{base}"))
+        lref = F.col(name) if name in left_cols else companion_default(name)
+        if f"__lj_{name}" in right_cols:
+            return F.when(F.col(base).isNull(), F.col(f"__lj_{name}")).otherwise(lref)
+        return lref
+
     for f in filters:
-        # string constants are masked first: the \b-token rewrites must
-        # never touch a variable name occurring INSIDE a quoted literal
-        # (FILTER(?note = "see label") with compat var `label`)
-        f, _strs = _mask_strings(f)
-        for c in compat:
-            f = re.sub(rf"\b{re.escape(c)}\b", "\x01M\x01", f)  # bare var only
-            for suf in _COMPANION_SUFFIXES:
-                tok = f"{c}{suf}"
-                if f"__lj_{tok}" in right_cols:
-                    # the merged companion: adopted side's copy when the
-                    # left binding is NULL.  Either side may LACK the
-                    # column (subject-position vars carry no companions
-                    # since r5) — dangling references become the
-                    # untyped-binding default instead of an unresolvable
-                    # column
-                    lref = tok if tok in left_cols else _comp_default(tok)
-                    f = re.sub(
-                        rf"\b{tok}\b",
-                        f"(CASE WHEN \x01L\x01 IS NULL THEN __lj_{tok} ELSE {lref} END)",
-                        f,
-                    )
-                elif tok not in left_cols:
-                    f = re.sub(rf"\b{tok}\b", _comp_default(tok), f)
-            f = f.replace("\x01M\x01", f"coalesce({c}, __lj_{c})")
-            f = f.replace("\x01L\x01", c)
-        cond = cond & F.expr(_unmask_strings(f, _strs))
+        cond = cond & compile_expr(f, merged)
     out = left.join(right, cond, how)
     # merge compat vars: an unbound left binding adopts the right value
     # (and its typed-literal companions)
@@ -1349,10 +1286,11 @@ class VirtualGraph:
         Shared variables join (reference: NodeRelationJoiner); result has
         one string column per variable (node lexical value).
 
-        ``filters``: Spark-SQL boolean expressions over variable names —
-        the pushable subset of SPARQL FILTER (Catalyst pushes them into
-        the joins/scans where possible; the reference translates the
-        same subset to SQL via TransformExprToSQLApplyer).
+        ``filters``: boolean expressions over variable names in the
+        SPARQL FILTER dialect (SPARQL expressions plus LIKE and
+        pass-through Spark function names), parsed and compiled to
+        Columns by ``sparql_expr`` as for SPARQL; Catalyst pushes them
+        into the joins/scans where possible.
         ``optional``: a list of OPTIONAL groups — each a pattern list,
         or a (patterns, filters) tuple whose filters are scoped to the
         group (evaluated inside the LeftJoin condition, SPARQL
@@ -1528,7 +1466,7 @@ class VirtualGraph:
                 c for c in rdf.columns if not _is_companion(c)
             } - shared_bound
         for f in filters or []:
-            out = out.filter(F.expr(f))
+            out = out.filter(compile_expr(as_tree(f), frame_resolver(out.columns)))
         return out
 
     # ------------------------------------------------------------------

@@ -16,16 +16,18 @@ here the residual ops are native DataFrame ops):
   DESCRIBE (?v ... | <iri> ...) [WHERE { ... }]  → triple frame
   SELECT [DISTINCT] (?v ... | (AGG(?v) AS ?a) | (expr AS ?a) | *) WHERE {
       triple patterns '.'-separated;  { A } UNION { B } groups;
-      FILTER (<expr>)            — Spark-SQL booleans over vars plus the
-                                   SPARQL builtins regex()/str()/lang()/
-                                   datatype()/bound()/isLiteral()/isIRI()/
+      FILTER (<expr>)            — SPARQL expressions plus LIKE and
+                                   pass-through Spark function names
+                                   (sparql_expr: one tree, compiled
+                                   to a Column), with the builtins
+                                   regex()/str()/lang()/datatype()/
+                                   bound()/isLiteral()/isIRI()/
                                    STRSTARTS/STRENDS/STRLEN/UCASE/LCASE/
                                    CONTAINS/SUBSTR/langMatches/STRBEFORE/
                                    STRAFTER/REPLACE (regex)/CONCAT/
                                    ENCODE_FOR_URI/IRI/MD5/SHA1/SHA256/384/
                                    512/isBlank/isNumeric/sameTerm/
-                                   YEAR..SECONDS/TZ/UUID/STRUUID/RAND/NOW,
-                                   translated to Catalyst expressions
+                                   YEAR..SECONDS/TZ/UUID/STRUUID/RAND/NOW
       FILTER [NOT] EXISTS { triple patterns }  — semi/anti join
       OPTIONAL { triple patterns [FILTER...] }  — FILTERs written inside
                                    the braces scope to the LeftJoin
@@ -43,22 +45,22 @@ here the residual ops are native DataFrame ops):
       { SELECT ... WHERE { ... } ... }  — subquery, joined on shared vars
       GRAPH (<iri> | ?g) { ... }  — named-graph scope (data / vocabulary)
   }
-  [GROUP BY ?v ...] [HAVING (<expr over aliases or inline
-                              COUNT/SUM/AVG/MIN/MAX calls>) ...]
-  [ORDER BY [ASC|DESC](?v) ...] [LIMIT n] [OFFSET n]
+  [GROUP BY ?v ...] [HAVING (<expr over aliases or aggregate calls>) ...]
+  [ORDER BY [ASC|DESC](<expr>) | ?v ...] [LIMIT n] [OFFSET n]
   ASK WHERE { ... }
 
 Aggregates: COUNT(*) / COUNT(?v) / COUNT(DISTINCT ?v) / SUM / AVG /
 MIN / MAX (SUM/AVG cast the lexical binding to double; MIN/MAX compare
 the lexical form) / GROUP_CONCAT([DISTINCT] ?v; SEPARATOR="s") /
 SAMPLE(?v).  Aggregate arguments may be full EXPRESSIONS —
-SUM(?price * (1 - ?disc)), the TPC-H Q1 shape — evaluated as hidden
-BIND columns; arithmetic arguments cast var references to double
-(SPARQL numeric-value semantics over lexical bindings).  GROUP_CONCAT sorts members before joining and SAMPLE
-takes the minimum — SPARQL leaves both unspecified; this engine picks
-the deterministic representative so results are reproducible across
-partitionings (and replayable by the DuckDB oracle).  BINDs evaluate
-before FILTERs within a group.
+SUM(?price * (1 - ?disc)), the TPC-H Q1 shape — and aggregate calls
+may sit anywhere in a SELECT expression or HAVING constraint, each one
+hidden aggregate column (numeric operands: sparql_expr).  GROUP_CONCAT
+sorts members before joining and SAMPLE takes the minimum — SPARQL
+leaves both unspecified; this engine picks the deterministic
+representative so results are reproducible across partitionings (and
+replayable by the DuckDB oracle).  BINDs evaluate before FILTERs
+within a group.
 
 Terms: <iri>, pfx:local, "literal" (@lang / ^^dt make the bound term a
 TYPED literal — datatype/lang must unify, TypedNodeMaker semantics),
@@ -98,241 +100,27 @@ ARQ).
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass, field
 from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
-
-_AGG_FNS = {"COUNT", "SUM", "AVG", "MIN", "MAX", "GROUP_CONCAT", "SAMPLE"}
-
-_COMP_RE = re.compile(r"\b\w+?__(?:dt|lang|islit)\b")
-
-
-def _rewrite_builtins(expr: str) -> str:
-    """SPARQL FILTER/BIND builtins → Spark SQL over the binding columns
-    and their typed-literal companions (v__lang / v__dt / v__islit) —
-    the Catalyst analogue of the reference's TransformExprToSQLApplyer
-    + expr/* translation layer.
-
-    String constants are masked with placeholders first so the textual
-    operator rewrites (&&, ||, !, builtin names) can never corrupt a
-    quoted literal like "Tom&&Jerry" or an IRI containing '!'."""
-    strings: list[str] = []
-
-    def _mask(m):
-        strings.append(m.group(0))
-        return f"\x00{len(strings) - 1}\x00"
-
-    e = re.sub(r"'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\"", _mask, expr)
-    e = re.sub(r"\blang\s*\(\s*(\w+)\s*\)", r"coalesce(\1__lang, '')", e, flags=re.I)
-    e = re.sub(
-        r"\bdatatype\s*\(\s*(\w+)\s*\)",
-        # RDF 1.1 / SPARQL 17.4.2.7: a language-tagged literal's
-        # datatype is rdf:langString (its __dt companion is NULL);
-        # a plain literal IS xsd:string
-        rf"(CASE WHEN nullif(\1__lang, '') IS NOT NULL"
-        rf" THEN 'http://www.w3.org/1999/02/22-rdf-syntax-ns#langString'"
-        rf" ELSE coalesce(\1__dt, CASE WHEN \1__islit THEN '{XSD_STRING}' END) END)",
-        e,
-        flags=re.I,
-    )
-    e = re.sub(r"\bbound\s*\(\s*(\w+)\s*\)", r"(\1 IS NOT NULL)", e, flags=re.I)
-    e = re.sub(r"\bisliteral\s*\(\s*(\w+)\s*\)", r"coalesce(\1__islit, false)", e, flags=re.I)
-    e = re.sub(
-        r"\bisblank\s*\(\s*(\w+)\s*\)",
-        r"(NOT coalesce(\1__islit, false) AND startswith(\1, '_:'))",
-        e,
-        flags=re.I,
-    )
-    e = re.sub(
-        r"\bisiri\s*\(\s*(\w+)\s*\)",
-        r"(NOT coalesce(\1__islit, false) AND NOT startswith(\1, '_:'))",
-        e,
-        flags=re.I,
-    )
-    # isNumeric: a literal whose datatype is an XSD numeric type
-    _NUM_DTS = ", ".join(
-        f"'http://www.w3.org/2001/XMLSchema#{t}'"
-        for t in (
-            "integer", "decimal", "float", "double", "long", "int", "short",
-            "byte", "nonNegativeInteger", "nonPositiveInteger",
-            "negativeInteger", "positiveInteger", "unsignedLong",
-            "unsignedInt", "unsignedShort", "unsignedByte",
-        )
-    )
-    e = re.sub(
-        r"\bisnumeric\s*\(\s*(\w+)\s*\)",
-        # inner coalesce: a plain/lang literal has NULL __dt, and
-        # NULL IN (...) is NULL — isNumeric must say false, not NULL
-        rf"(coalesce(\1__islit, false) AND coalesce(\1__dt IN ({_NUM_DTS}), false))",
-        e,
-        flags=re.I,
-    )
-    # sameTerm: full RDF-term identity — lexical AND datatype AND lang
-    # AND literal-kind, null-safe on every companion (missing
-    # companions are NULL-filled by _ensure_companions)
-    e = re.sub(
-        r"\bsameterm\s*\(\s*(\w+)\s*,\s*(\w+)\s*\)",
-        r"(\1 <=> \2 AND \1__dt <=> \2__dt AND \1__lang <=> \2__lang"
-        r" AND coalesce(\1__islit, false) <=> coalesce(\2__islit, false))",
-        e,
-        flags=re.I,
-    )
-    e = re.sub(r"\bstr\s*\(\s*(\w+)\s*\)", r"\1", e, flags=re.I)
-    # string builtins → Spark SQL names (SUBSTR/CONCAT/REPLACE/ABS/ROUND/
-    # CEIL/FLOOR/COALESCE/IF are spelled identically and pass through)
-    e = re.sub(r"\bstrstarts\s*\(", "startswith(", e, flags=re.I)
-    e = re.sub(r"\bstrends\s*\(", "endswith(", e, flags=re.I)
-    e = re.sub(r"\bstrlen\s*\(", "length(", e, flags=re.I)
-    e = re.sub(r"\bucase\s*\(", "upper(", e, flags=re.I)
-    e = re.sub(r"\blcase\s*\(", "lower(", e, flags=re.I)
-    # SPARQL REPLACE is regex-based (fn:replace), unlike Spark's literal
-    # replace()
-    e = re.sub(r"\breplace\s*\(", "regexp_replace(", e, flags=re.I)
-    e = re.sub(r"\bsha256\s*\(\s*((?:[^,()]|\([^)]*\))+?)\s*\)", r"sha2(\1, 256)", e, flags=re.I)
-    e = re.sub(r"\bsha384\s*\(\s*((?:[^,()]|\([^)]*\))+?)\s*\)", r"sha2(\1, 384)", e, flags=re.I)
-    e = re.sub(r"\bsha512\s*\(\s*((?:[^,()]|\([^)]*\))+?)\s*\)", r"sha2(\1, 512)", e, flags=re.I)
-    # date/time accessors over xsd:dateTime/xsd:date lexical forms
-    # (node values are lexical strings; Spark's timestamp cast accepts
-    # the ISO 'T' separator).  SPARQL 17.4.5 / the XPath accessors
-    # return the component of the value IN ITS OWN TIMEZONE — but
-    # cast(x as timestamp) converts zone-qualified lexical forms (the
-    # ubiquitous 'Z', or '±hh:mm') into the SESSION timezone first,
-    # shifting every component (hour(cast('…T14:45:13-05:00')) = 19
-    # under UTC where the spec answer is 14).  Strip the designator
-    # before the cast so components are read verbatim (ADVICE r6).
-    _strip_tz = r"regexp_replace(\1, '(Z|[+-][0-9]{2}:[0-9]{2})$', '')"
-    for sp_fn, sql_fn in (
-        ("year", "year"), ("month", "month"), ("day", "day"),
-        ("hours", "hour"), ("minutes", "minute"),
-    ):
-        e = re.sub(
-            rf"\b{sp_fn}\s*\(\s*((?:[^,()]|\([^)]*\))+?)\s*\)",
-            rf"{sql_fn}(cast({_strip_tz} as timestamp))",
-            e,
-            flags=re.I,
-        )
-    # SECONDS returns xsd:decimal (fractional seconds survive)
-    e = re.sub(
-        r"\bseconds\s*\(\s*((?:[^,()]|\([^)]*\))+?)\s*\)",
-        rf"(cast(date_format(cast({_strip_tz} as timestamp), 'ss.SSS') as decimal(9,3)))",
-        e,
-        flags=re.I,
-    )
-    e = re.sub(
-        r"\btz\s*\(\s*((?:[^,()]|\([^)]*\))+?)\s*\)",
-        r"coalesce(regexp_extract(\1, '(Z|[+-][0-9]{2}:[0-9]{2})$', 1), '')",
-        e,
-        flags=re.I,
-    )
-    # UUID mints a urn:uuid IRI; STRUUID the bare simple literal.
-    # RAND/NOW pass to the Spark equivalents (NOW as the xsd:dateTime
-    # lexical form; one timestamp per query per Spark semantics)
-    e = re.sub(r"\buuid\s*\(\s*\)", "concat('urn:uuid:', uuid())", e, flags=re.I)
-    e = re.sub(r"\bstruuid\s*\(\s*\)", "uuid()", e, flags=re.I)
-    e = re.sub(r"\brand\s*\(\s*\)", "rand()", e, flags=re.I)
-    e = re.sub(
-        r"\bnow\s*\(\s*\)",
-        "date_format(current_timestamp(), \"yyyy-MM-dd'T'HH:mm:ss.SSSxxx\")",
-        e,
-        flags=re.I,
-    )
-    # ENCODE_FOR_URI: RFC3986 percent-encoding — url_encode is form
-    # encoding, so space comes back '+' and must be mapped to %20
-    e = re.sub(
-        r"\bencode_for_uri\s*\(\s*((?:[^,()]|\([^)]*\))+?)\s*\)",
-        r"replace(url_encode(\1), '+', '%20')",
-        e,
-        flags=re.I,
-    )
-    # IRI()/URI(): node values are lexical strings in this engine
-    e = re.sub(r"\b(?:iri|uri)\s*\(\s*((?:[^,()]|\([^)]*\))+?)\s*\)", r"(\1)", e, flags=re.I)
-
-    _ARG = r"((?:[^,()]|\([^)]*\))+?)"
-
-    def _two_arg(name: str, template: str, src: str) -> str:
-        def sub(m):
-            return template.format(a=m.group(1).strip(), b=m.group(2).strip())
-
-        return re.sub(
-            rf"\b{name}\s*\(\s*{_ARG}\s*,\s*{_ARG}\s*\)", sub, src, flags=re.I
-        )
-
-    # STRBEFORE/STRAFTER return '' (not NULL) when the needle is absent
-    e = _two_arg(
-        "strbefore",
-        "(CASE WHEN instr({a}, {b}) > 0"
-        " THEN substring({a}, 1, instr({a}, {b}) - 1) ELSE '' END)",
-        e,
-    )
-    e = _two_arg(
-        "strafter",
-        "(CASE WHEN instr({a}, {b}) > 0"
-        " THEN substring({a}, instr({a}, {b}) + length({b})) ELSE '' END)",
-        e,
-    )
-
-    def _lang_matches(m):
-        arg = m.group(1)
-        rng = strings[int(m.group(2))]
-        if rng[1:-1] == "*":  # langMatches(x, "*"): any non-empty tag
-            return f"({arg} <> '')"
-        low = rng[0] + rng[1:-1].lower() + rng[-1]
-        strings.append(low)
-        exact = f"lower({arg}) = \x00{len(strings) - 1}\x00"
-        pref = rng[0] + rng[1:-1].lower() + "-" + rng[-1]
-        strings.append(pref)
-        return f"({exact} OR startswith(lower({arg}), \x00{len(strings) - 1}\x00))"
-
-    e = re.sub(
-        r"\blangmatches\s*\(\s*((?:[^,()]|\([^)]*\))+?)\s*,\s*\x00(\d+)\x00\s*\)",
-        _lang_matches,
-        e,
-        flags=re.I,
-    )
-
-    def _rx(m):
-        var = m.group(1)
-        pat = strings[int(m.group(2))]
-        flags = strings[int(m.group(4))] if m.group(4) else None
-        if flags:
-            pat = pat[0] + f"(?{flags[1:-1]})" + pat[1:-1] + pat[-1]
-        strings.append(pat)
-        return f"regexp_like({var}, \x00{len(strings) - 1}\x00)"
-
-    e = re.sub(
-        r"\bregex\s*\(\s*(\w+)\s*,\s*\x00(\d+)\x00"
-        r"(\s*,\s*\x00(\d+)\x00)?\s*\)",
-        _rx,
-        e,
-        flags=re.I,
-    )
-    # SPARQL logical operators → Spark SQL (string constants are masked)
-    e = e.replace("&&", " AND ").replace("||", " OR ")
-    e = re.sub(r"(?<![!=<>])!(?!=)", " NOT ", e)
-    return re.sub(r"\x00(\d+)\x00", lambda m: strings[int(m.group(1))], e)
-
-_TOK = re.compile(
-    r"""
-    (?P<iri><[^>\s]*>)
-  | (?P<str>"(?:[^"\\]|\\.)*"|'(?:[^'\\]|\\.)*')(?P<lang>@[\w-]+)?(?:\^\^(?P<dtiri><[^>]*>|[\w.-]*:[\w.-]+))?
-  | (?P<var>[?$][A-Za-z_]\w*)
-  | (?P<num>[+-]?\d+(?:\.\d+)?)
-  | (?P<pname>[A-Za-z_][\w.-]*)?:(?P<local>[\w.%-]*)
-  | (?P<kw>[A-Za-z_]\w*)
-  | (?P<op>>=|<=|!=|&&|\|\||[=<>+\-/!%^|?])
-  | (?P<punct>[{}()\[\].;,*])
-  | (?P<comment>\#[^\n]*)
-  | (?P<ws>\s+)
-""",
-    re.VERBOSE,
+from ont_d2rq_spark.sparql_expr import (
+    COMPANIONS,
+    ExprParser,
+    SparqlError,
+    companion,
+    compile_expr,
+    frame_resolver,
+    lift_aggregates,
+    split_companion,
+    tokenize,
+    unbind,
+    unescape,
 )
 
+RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
 @dataclass
 class Query:
@@ -340,22 +128,23 @@ class Query:
     variables: list[str] = field(default_factory=list)  # output names; empty = *
     distinct: bool = False
     patterns: list[tuple] = field(default_factory=list)
-    filters: list[str] = field(default_factory=list)
+    # expressions are sparql_expr trees (FILTER, HAVING, BIND, ORDER BY,
+    # SELECT expressions)
+    filters: list = field(default_factory=list)
     # OPTIONAL groups: full recursive Query bodies whose top-level
     # .filters form the LeftJoin condition (SPARQL leftjoin)
     optional: list["Query"] = field(default_factory=list)
     # UNION branches: full recursive Query bodies (branch-scoped
     # filters and nested constructs evaluate inside the branch)
     union: list["Query"] = field(default_factory=list)
-    order_by: list[tuple] = field(default_factory=list)  # (var, desc)
+    order_by: list[tuple] = field(default_factory=list)  # (tree, desc)
     limit: Optional[int] = None
     offset: Optional[int] = None
-    # ("var", name) | ("agg", fn, arg, distinct, alias, sep) | ("expr", sql, alias)
+    # ("var", name) | ("expr", tree, alias)
     projections: list[tuple] = field(default_factory=list)
     group_by: list[str] = field(default_factory=list)
-    having: list[str] = field(default_factory=list)
-    # (sql_expr, var[, (STRLANG|STRDT, tag)])
-    binds: list[tuple] = field(default_factory=list)
+    having: list = field(default_factory=list)
+    binds: list[tuple] = field(default_factory=list)  # (tree, var)
     values_clauses: list[tuple] = field(default_factory=list)  # (vars, rows)
     # trailing query-level ValuesClause: joined AFTER the WHERE group
     # evaluates (SPARQL 18.2.2 P := Join(P, ToMultiSet(data))) — a WHERE
@@ -372,18 +161,11 @@ class Query:
     # graph, FROM NAMED <g> restricts what GRAPH can range over
     from_graphs: list[str] = field(default_factory=list)
     from_named: list[str] = field(default_factory=list)
-    # every ?var the parser saw inside a FILTER/BIND/HAVING expression,
-    # anywhere in the query (top-level only; nested groups inherit via
-    # known_vars).  A var referenced ONLY by an expression is never a
-    # binding column, so _null_out_of_scope must know it is a variable
-    # to give it unbound semantics instead of failing Catalyst
-    # resolution (SPARQL: unbound var in an expression -> error ->
-    # filter false / BIND leaves the target unbound)
+    # every ?var seen in any expression of the query (nested groups
+    # inherit via known_vars): a var only an expression references is
+    # no binding column, yet must read as unbound (_in_scope), not fail
+    # Catalyst resolution
     expr_vars: set = field(default_factory=set)
-
-
-class SparqlError(ValueError):
-    pass
 
 
 class _GroupAtom:
@@ -393,24 +175,14 @@ class _GroupAtom:
         self.alts = alts
 
 
-class _P:
+class _P(ExprParser):
+    """The query parser; its expression sites call the inherited
+    ExprParser (``expr()``, or ``primary()`` for a FILTER / HAVING /
+    ORDER BY constraint), which records every ?var in ``seen``."""
+
     def __init__(self, text: str):
-        self.toks = []
-        pos = 0
-        while pos < len(text):
-            m = _TOK.match(text, pos)
-            if not m:
-                raise SparqlError(f"cannot tokenize at {text[pos:pos+30]!r}")
-            pos = m.end()
-            if m.lastgroup not in ("ws", "comment"):
-                self.toks.append(m)
-        self.i = 0
-        self.prefixes: dict[str, str] = {}
+        super().__init__(tokenize(text))
         self._fresh_n = 0
-        self._expr_vars: set = set()
-        # hidden BIND columns synthesized for aggregate EXPRESSION
-        # arguments; attached to the query whose SELECT produced them
-        self._agg_binds: list[tuple] = []
 
     def peek(self):
         return self.toks[self.i] if self.i < len(self.toks) else None
@@ -441,22 +213,14 @@ class _P:
         if t.lastgroup in ("iri",):
             return g[1:-1]
         if t.group("str") is not None:
-            lex = t.group("str")[1:-1].replace('\\"', '"').replace("\\\\", "\\")
+            lex = unescape(t.group("str")[1:-1])
             lang, dt = t.group("lang"), t.group("dtiri")
             if lang or dt:
                 # typed literal → datatype/lang must UNIFY with the
                 # relation's literal type (TypedNodeMaker semantics)
                 from ont_d2rq_spark.graph import Lit
 
-                dturi = None
-                if dt:
-                    if dt.startswith("<"):
-                        dturi = dt[1:-1]
-                    else:
-                        pfx, _, local = dt.partition(":")
-                        if pfx not in self.prefixes:
-                            raise SparqlError(f"unknown prefix {pfx!r}")
-                        dturi = self.prefixes[pfx] + local
+                dturi = self._iri(dt) if dt else None
                 return Lit(lex, datatype=dturi, lang=lang[1:] if lang else None)
             # plain literal → matched on lexical form
             return lex
@@ -477,9 +241,6 @@ class _P:
     def parse(self) -> Query:
         while self.kw("PREFIX"):
             t = self.next()
-            if t.group("local") not in ("", None) or t.group("pname") is None and ":" not in t.group(0):
-                # pname token with empty local, e.g. "ex:"
-                pass
             pfx = t.group("pname") or ""
             iri = self.next().group(0)
             if not iri.startswith("<"):
@@ -548,8 +309,6 @@ class _P:
         # group so group FILTERs see its vars as unbound, per 18.2.2)
         if self.kw("VALUES"):
             q.trailing_values.append(self._values_clause())
-        q.binds.extend(self._agg_binds)
-        del self._agg_binds[:]
         return q
 
     def _select_clause(self, q: Query):
@@ -569,10 +328,14 @@ class _P:
                 continue
             if t.group(0) == "(":
                 self.next()
-                item = self._select_binding()
-                q.projections.append(item)
-                # ("agg", fn, arg, distinct, alias, sep) | ("expr", sql, alias)
-                q.variables.append(item[4] if item[0] == "agg" else item[-1])
+                tree = self.expr()
+                self.expect("AS")
+                alias = self.next()
+                if alias.lastgroup != "var":
+                    raise SparqlError("select expression needs AS ?alias")
+                self.expect(")")
+                q.projections.append(("expr", tree, alias.group(0)[1:]))
+                q.variables.append(alias.group(0)[1:])
                 continue
             break
 
@@ -598,37 +361,18 @@ class _P:
             if not q.group_by:
                 raise SparqlError("GROUP BY needs at least one ?var")
         while self.kw("HAVING"):
-            q.having.append(self._filter_expr())
+            q.having.append(self.primary())
         if self.kw("ORDER"):
             self.expect("BY")
+            # [ASC|DESC](expr), ?var, (expr) or a call, until the next clause
             while True:
+                desc = self.kw("ASC", "DESC")
                 t = self.peek()
-                if t is None:
+                if desc is None and (
+                    t is None or t.group(0).upper() in ("LIMIT", "OFFSET", "VALUES", "}")
+                ):
                     break
-                if t.group(0).upper() in ("ASC", "DESC"):
-                    d = self.next().group(0).upper() == "DESC"
-                    self.expect("(")
-                    # ASC/DESC accept any expression, not just a ?var
-                    parts: list[str] = []
-                    depth = 0
-                    while True:
-                        nt = self.peek()
-                        if nt is None:
-                            raise SparqlError("unterminated ORDER BY expression")
-                        if nt.group(0) == "(":
-                            depth += 1
-                        elif nt.group(0) == ")":
-                            if depth == 0:
-                                self.next()
-                                break
-                            depth -= 1
-                        self.next()
-                        parts.append(self._expr_token(nt))
-                    q.order_by.append((_rewrite_builtins(" ".join(parts)), d))
-                elif t.lastgroup == "var":
-                    q.order_by.append((self.next().group(0)[1:], False))
-                else:
-                    break
+                q.order_by.append((self.primary(), desc == "DESC"))
         if self.kw("LIMIT"):
             q.limit = int(self.next().group(0))
         if self.kw("OFFSET"):
@@ -694,7 +438,7 @@ class _P:
                     if wrapped:
                         self.expect(")")
                     continue
-                q.filters.append(self._filter_expr())
+                q.filters.append(self.primary())
                 continue
             if g.upper() == "OPTIONAL":
                 self.next()
@@ -715,15 +459,12 @@ class _P:
                     # evaluated independently, joined on shared variables
                     self.next()
                     sub = Query(form="SELECT")
-                    before = len(self._agg_binds)
                     self._select_clause(sub)
                     self.kw("WHERE")
                     self.expect("{")
                     self._group(sub.patterns, sub)
                     self._modifiers(sub)
                     self.expect("}")
-                    sub.binds.extend(self._agg_binds[before:])
-                    del self._agg_binds[before:]
                     q.subqueries.append(sub)
                     continue
                 # group — the { A } UNION { B } [UNION { C }] form.
@@ -742,46 +483,17 @@ class _P:
                 q.minus.append(self._braced())
                 continue
             if g.upper() == "BIND":
+                # STRLANG / STRDT constructors are calls like any other;
+                # their tag lands in the target's companion columns
                 self.next()
                 self.expect("(")
-                nxt2 = self.peek()
-                meta = None
-                if nxt2 is not None and nxt2.group(0).upper() in ("STRLANG", "STRDT"):
-                    # typed-literal constructors: the tag lands in the
-                    # companion columns (v__lang / v__dt / v__islit) so
-                    # lang()/datatype() filters and typed CONSTRUCT see it
-                    kind = self.next().group(0).upper()
-                    self.expect("(")
-                    parts: list = []
-                    depth = 0
-                    while True:
-                        t2 = self.peek()
-                        if t2 is None:
-                            raise SparqlError(f"unterminated {kind}")
-                        g2 = t2.group(0)
-                        if depth == 0 and g2 == ",":
-                            self.next()
-                            break
-                        if g2 == "(":
-                            depth += 1
-                        elif g2 == ")":
-                            depth -= 1
-                        self.next()
-                        parts.append(self._expr_token(t2))
-                    expr = _rewrite_builtins(" ".join(parts))
-                    tag = self.term()  # "en" (STRLANG) / datatype IRI (STRDT)
-                    if not isinstance(tag, str) or tag.startswith("?"):
-                        raise SparqlError(f"{kind} tag must be a constant")
-                    self.expect(")")
-                    meta = (kind, tag)
-                    self.expect("AS")
-                else:
-                    expr = self._expr_until_as()  # consumes the AS
+                tree = self.expr()
+                self.expect("AS")
                 var = self.next()
                 if var.lastgroup != "var":
                     raise SparqlError("BIND needs (expr AS ?var)")
                 self.expect(")")
-                q.binds.append((expr, var.group(0)[1:], meta))
+                q.binds.append((tree, var.group(0)[1:]))
                 continue
             if g.upper() == "VALUES":
                 self.next()
@@ -1024,138 +736,6 @@ class _P:
             preds.append(seq[0][0])
         return [(s, tuple(preds), o)]
 
-    def _select_binding(self):
-        """Inside '(' … ')': an aggregate or a generic expression with
-        an AS ?alias.  Returns a Query.projections entry."""
-        t = self.peek()
-        nxt = self.toks[self.i + 1] if self.i + 1 < len(self.toks) else None
-        if (
-            t is not None
-            and t.group(0).upper() in _AGG_FNS
-            and nxt is not None
-            and nxt.group(0) == "("
-        ):
-            fn = self.next().group(0).upper()
-            self.expect("(")
-            distinct = bool(self.kw("DISTINCT"))
-            t0 = self.peek()
-            nxt0 = self.toks[self.i + 1] if self.i + 1 < len(self.toks) else None
-            if t0 is not None and t0.group(0) == "*":
-                self.next()
-                arg = "*"
-                if distinct or fn != "COUNT":
-                    raise SparqlError(f"{fn}(*) only as COUNT(*)")
-            elif (
-                t0 is not None
-                and t0.lastgroup == "var"
-                and nxt0 is not None
-                and nxt0.group(0) in (")", ";")
-            ):
-                self.next()
-                arg = t0.group(0)[1:]
-            else:
-                # expression argument — SUM(?price * (1 - ?disc)), the
-                # TPC-H Q1 shape: capture to the aggregate's close (or
-                # the GROUP_CONCAT ';'), evaluate as a hidden BIND
-                # column (`__aggx…`, excluded from SELECT *), aggregate
-                # over that.  SPARQL numeric operators act on the
-                # literal's NUMERIC VALUE, but bindings are lexical
-                # strings (and Spark ANSI coerces string⊗int to BIGINT,
-                # which rejects decimals) — when the expression uses
-                # arithmetic, var references cast to double.
-                parts: list[tuple[str, bool]] = []
-                depth = 0
-                has_arith = False
-                while True:
-                    t = self.peek()
-                    if t is None:
-                        raise SparqlError(f"unterminated {fn}(...)")
-                    g = t.group(0)
-                    if g == "(":
-                        depth += 1
-                    elif g == ")":
-                        if depth == 0:
-                            break
-                        depth -= 1
-                    elif g == ";" and depth == 0:
-                        break
-                    if g in ("+", "-", "*", "/"):
-                        has_arith = True
-                    self.next()
-                    parts.append((self._expr_token(t), t.lastgroup == "var"))
-                if not parts:
-                    raise SparqlError(f"empty aggregate argument in {fn}()")
-                expr = " ".join(
-                    f"CAST({txt} AS DOUBLE)" if (has_arith and is_v) else txt
-                    for txt, is_v in parts
-                )
-                self._fresh_n += 1
-                arg = f"__aggx{self._fresh_n}"
-                self._agg_binds.append((_rewrite_builtins(expr), arg, None))
-            sep = None
-            if self.peek() is not None and self.peek().group(0) == ";":
-                if fn != "GROUP_CONCAT":
-                    raise SparqlError(f"';' only valid inside GROUP_CONCAT, not {fn}")
-                self.next()
-                self.expect("SEPARATOR")
-                self.expect("=")
-                st = self.next()
-                if st is None or st.group("str") is None:
-                    raise SparqlError("SEPARATOR needs a string constant")
-                sep = st.group("str")[1:-1]
-            self.expect(")")
-            self.expect("AS")
-            alias = self.next()
-            if alias.lastgroup != "var":
-                raise SparqlError("aggregate needs AS ?alias")
-            self.expect(")")
-            return ("agg", fn, arg, distinct, alias.group(0)[1:], sep)
-        expr = self._expr_until_as()
-        alias = self.next()
-        if alias.lastgroup != "var":
-            raise SparqlError("select expression needs AS ?alias")
-        self.expect(")")
-        return ("expr", expr, alias.group(0)[1:])
-
-    def _expr_until_as(self) -> str:
-        """Capture tokens (builtins rewritten, ?var → column) until the
-        top-level AS keyword, which is consumed."""
-        parts: list[str] = []
-        depth = 0
-        while True:
-            t = self.peek()
-            if t is None:
-                raise SparqlError("unterminated expression (missing AS)")
-            g = t.group(0)
-            if depth == 0 and g.upper() == "AS":
-                self.next()
-                break
-            if g == "(":
-                depth += 1
-            elif g == ")":
-                if depth == 0:
-                    raise SparqlError("expected AS before ')'")
-                depth -= 1
-            self.next()
-            parts.append(self._expr_token(t))
-        return _rewrite_builtins(" ".join(parts))
-
-    def _expr_token(self, t) -> str:
-        """One captured expression token → Spark SQL text: ?var → column
-        name, <iri> / pfx:local → quoted IRI string, rest verbatim."""
-        g = t.group(0)
-        if t.lastgroup == "var":
-            self._expr_vars.add(g[1:])
-            return g[1:]
-        if t.lastgroup == "iri":
-            return "'" + g[1:-1] + "'"
-        if t.group("str") is None and t.group("local") is not None:
-            pfx = t.group("pname") or ""
-            if pfx not in self.prefixes:
-                raise SparqlError(f"unknown prefix {pfx!r} in expression")
-            return "'" + self.prefixes[pfx] + t.group("local") + "'"
-        return g
-
     def _values_clause(self):
         """VALUES ?v { t … } | VALUES (?v ?w) { (t t) … } → (vars, rows)."""
         t = self.peek()
@@ -1201,77 +781,38 @@ class _P:
             return None
         return str(self.term())
 
-    def _filter_expr(self) -> str:
-        """Capture the parenthesized FILTER body verbatim, translating
-        ?var → var (a DataFrame column) — the expression language is
-        Spark SQL, the engine the reference would translate INTO."""
-        self.expect("(")
-        depth = 1
-        parts = []
-        while depth > 0:
-            t = self.next()
-            g = t.group(0)
-            if g == "(":
-                depth += 1
-            elif g == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            parts.append(self._expr_token(t))
-        return _rewrite_builtins(" ".join(parts))
-
 
 def parse(query: str) -> Query:
     p = _P(query)
     q = p.parse()
-    q.expr_vars |= p._expr_vars
+    q.expr_vars |= p.seen
     return q
 
 
-def _ensure_companions(df: DataFrame, expr: str) -> DataFrame:
-    """Add NULL/false typed-literal companion columns an expression
-    references but the pattern did not bind (e.g. lang() of a
-    BIND-created var) so Catalyst resolution never fails."""
-    for col in set(_COMP_RE.findall(expr)):
-        if col not in df.columns:
-            df = df.withColumn(
-                col,
-                F.lit(False) if col.endswith("__islit") else F.lit(None).cast("string"),
-            )
-    return df
-
-
-def _agg_column(fn: str, arg: str, distinct: bool, alias: str, sep=None):
+def _agg_column(node, col):
+    """One aggregate call (sparql_expr "agg" node) → aggregate Column;
+    its argument compiles over the pre-aggregation frame."""
+    _, fn, arg, distinct, sep = node
+    x = None if arg is None else compile_expr(arg, col)
     if fn == "COUNT":
-        if arg == "*":
-            e = F.count(F.lit(1))
-        elif distinct:
-            e = F.countDistinct(F.col(arg))
-        else:
-            e = F.count(F.col(arg))
-    elif fn == "SUM":
-        c = F.col(arg).cast("double")
-        e = F.sum_distinct(c) if distinct else F.sum(c)
-    elif fn == "AVG":
+        if x is None:
+            return F.count(F.lit(1))
+        return F.countDistinct(x) if distinct else F.count(x)
+    if fn == "SUM":
+        return F.sum_distinct(x.cast("double")) if distinct else F.sum(x.cast("double"))
+    if fn == "AVG":
         if distinct:
             raise SparqlError("AVG(DISTINCT) not supported")
-        e = F.avg(F.col(arg).cast("double"))
-    elif fn == "MIN":
-        e = F.min(F.col(arg))
-    elif fn == "MAX":
-        e = F.max(F.col(arg))
-    elif fn == "GROUP_CONCAT":
+        return F.avg(x.cast("double"))
+    if fn == "GROUP_CONCAT":
         # members sorted before joining → deterministic across
         # partitionings (SPARQL leaves the order unspecified); DuckDB
         # twin: string_agg(x, sep ORDER BY x)
-        c = F.collect_set(F.col(arg)) if distinct else F.collect_list(F.col(arg))
-        e = F.array_join(F.array_sort(c), sep if sep is not None else " ")
-    elif fn == "SAMPLE":
-        # deterministic representative (any member is a valid SAMPLE)
-        e = F.min(F.col(arg))
-    else:  # pragma: no cover — parser restricts to _AGG_FNS
-        raise SparqlError(f"unknown aggregate {fn}")
-    return e.alias(alias)
+        c = F.collect_set(x) if distinct else F.collect_list(x)
+        return F.array_join(F.array_sort(c), sep if sep is not None else " ")
+    # MIN / MAX compare the lexical form; SAMPLE takes the deterministic
+    # representative (any member is a valid SAMPLE)
+    return F.max(x) if fn == "MAX" else F.min(x)
 
 
 def _construct_frame(df: DataFrame, template: list) -> DataFrame:
@@ -1315,6 +856,7 @@ def _construct_frame(df: DataFrame, template: list) -> DataFrame:
         )
 
     frames = []
+    col = frame_resolver(df.columns)
     for ts, tp, to in template:
         def _node(term):
             if _is_var(term):
@@ -1324,25 +866,15 @@ def _construct_frame(df: DataFrame, template: list) -> DataFrame:
                 return F.col(v)
             return F.lit(str(term))
 
-        if _is_var(to) and _var_name(to) in bn_vars:
-            o_dt = F.lit(None).cast("string")
-            o_lang = F.lit(None).cast("string")
-            o_islit = F.lit(False)
-        elif _is_var(to):
-            v = _var_name(to)
-            o_dt = F.col(f"{v}__dt") if f"{v}__dt" in df.columns else F.lit(None).cast("string")
-            o_lang = F.col(f"{v}__lang") if f"{v}__lang" in df.columns else F.lit(None).cast("string")
-            o_islit = F.col(f"{v}__islit") if f"{v}__islit" in df.columns else F.lit(False)
+        # the object term as an expression tree: its companions are the
+        # emitted literal metadata (a template bnode is a non-literal)
+        if _is_var(to) and _var_name(to) not in bn_vars:
+            obj = _var_name(to)
         elif isinstance(to, Lit):
-            o_dt = F.lit(to.datatype).cast("string")
-            o_lang = F.lit(to.lang).cast("string")
-            o_islit = F.lit(True)
+            obj = ("lit", str(to), to.datatype, to.lang)
         else:
-            o_dt, o_lang, o_islit = (
-                F.lit(None).cast("string"),
-                F.lit(None).cast("string"),
-                F.lit(False),
-            )
+            obj = ("iri", str(to))
+        o_dt, o_lang, o_islit = (companion(obj, suf, col) for suf in COMPANIONS)
         frames.append(
             df.select(
                 _node(ts).cast("string").alias("subj"),
@@ -1497,29 +1029,12 @@ def _query_maybe_unbound(q: Query) -> set:
     return _q_all_vars(q) - _q_certain_vars(q)
 
 
-def _null_out_of_scope(expr: str, frame_cols, known_vars) -> str:
-    """SPARQL filter scope: a variable that is not bound in the group
-    the filter appears in is UNBOUND — the reference evaluates it as
-    an error → false — even when an outer group binds it.  Rewrite
-    references to KNOWN query variables that the filter's frame does
-    not carry into NULL (and their companions into the untyped
-    defaults), so the expression evaluates with unbound semantics
-    instead of failing Catalyst resolution.  Tokens followed by '('
-    are function calls, never variables; string constants are
-    masked."""
-    from ont_d2rq_spark.graph import _comp_default, _mask_strings, _unmask_strings
-
-    masked, parts = _mask_strings(expr)
-    cols = set(frame_cols)
-    for v in known_vars:
-        if v in cols:
-            continue
-        for suf in ("__dt", "__lang", "__islit"):
-            tok = f"{v}{suf}"
-            if tok not in cols:
-                masked = re.sub(rf"\b{tok}\b(?!\s*\()", _comp_default(tok), masked)
-        masked = re.sub(rf"\b{re.escape(v)}\b(?!\s*\()", "CAST(NULL AS STRING)", masked)
-    return _unmask_strings(masked, parts)
+def _in_scope(tree, cols, known_vars):
+    """SPARQL filter scope: a known query variable that the frame does
+    not carry is UNBOUND in the group's expressions — the reference
+    evaluates it as an error → false — even when an outer group binds
+    it; its companions take the untyped defaults."""
+    return unbind(tree, set(known_vars) - set(cols))
 
 
 class _DatasetGraph:
@@ -1639,7 +1154,7 @@ def _eval_where(graph, q: Query, bgp_fn=None, skip_filters=False, known_vars=Non
     MINUS.  EXISTS bodies are correlated through their top-level
     filters (folded into the semi/anti-join condition over the merged
     row); everywhere else a filter referencing a variable outside its
-    group's scope evaluates it as UNBOUND (_null_out_of_scope), the
+    group's scope evaluates it as UNBOUND (_in_scope), the
     SPARQL bottom-up scope rule."""
     from functools import reduce as _reduce
 
@@ -1711,9 +1226,7 @@ def _eval_where(graph, q: Query, bgp_fn=None, skip_filters=False, known_vars=Non
                 c for c in df.columns if c in rdf.columns and not _is_companion(c)
             } - mu
             filts = [
-                _null_out_of_scope(
-                    f, set(df.columns) | set(rdf.columns), known_vars
-                )
+                _in_scope(f, set(df.columns) | set(rdf.columns), known_vars)
                 for f in oq.filters
             ]
             df = optional_join(
@@ -1839,30 +1352,22 @@ def _eval_where(graph, q: Query, bgp_fn=None, skip_filters=False, known_vars=Non
     for vars_, rows in q.values_clauses:
         df = _join_values(graph, df, maybe_unbound, vars_, rows)
     # BIND: new columns (evaluated before FILTERs, see module doc)
-    for b in q.binds:
-        expr, var, meta = b if len(b) == 3 else (*b, None)
+    for tree, var in q.binds:
         # a BIND expression referencing an out-of-scope var evaluates
         # it as UNBOUND (error -> the target stays unbound), same
         # scope rule as FILTER
-        expr = _null_out_of_scope(expr, df.columns, known_vars)
-        df = _ensure_companions(df, expr)
-        df = df.withColumn(var, F.expr(expr))
-        if meta is not None:  # STRLANG / STRDT typed-literal constructor
-            kind, tag = meta
-            df = df.withColumn(f"{var}__islit", F.lit(True))
-            df = df.withColumn(
-                f"{var}__lang",
-                F.lit(tag) if kind == "STRLANG" else F.lit(None).cast("string"),
-            )
-            df = df.withColumn(
-                f"{var}__dt",
-                F.lit(tag) if kind == "STRDT" else F.lit(None).cast("string"),
-            )
+        cols = df.columns
+        tree = _in_scope(tree, cols, known_vars)
+        col = frame_resolver(cols)
+        df = df.withColumn(var, compile_expr(tree, col))
+        if isinstance(tree, tuple) and tree[0] == "call" and tree[1] in ("STRLANG", "STRDT"):
+            # typed-literal constructor: the tag lands in the companions
+            for suf in COMPANIONS:
+                df = df.withColumn(var + suf, companion(tree, suf, col))
     if not skip_filters:
         for f in q.filters:
-            f = _null_out_of_scope(f, df.columns, known_vars)
-            df = _ensure_companions(df, f)
-            df = df.filter(F.expr(f))
+            cols = df.columns
+            df = df.filter(compile_expr(_in_scope(f, cols, known_vars), frame_resolver(cols)))
     # FILTER [NOT] EXISTS: semi/anti join on shared variables; with no
     # shared variables the group acts as a global non-emptiness gate
     # (unlike MINUS, NOT EXISTS on disjoint domains still filters).
@@ -1878,26 +1383,14 @@ def _eval_where(graph, q: Query, bgp_fn=None, skip_filters=False, known_vars=Non
         if sub is None:
             sub = _unit_frame(graph)
         efilts = [
-            _null_out_of_scope(f, set(df.columns) | set(sub.columns), known_vars)
+            _in_scope(f, set(df.columns) | set(sub.columns), known_vars)
             for f in eq.filters
         ]
         shared = [c for c in df.columns if c in sub.columns and not _is_companion(c)]
         how = "left_anti" if neg else "left_semi"
         compat = [c for c in shared if c in maybe_unbound or c in sub_maybe]
         if compat or efilts:
-            from ont_d2rq_spark.graph import _mask_strings, _unmask_strings
-
-            # companions a filter references but neither side binds
-            # default to NULL / false (untyped binding)
-            for f in efilts:
-                for tok in set(_COMP_RE.findall(_mask_strings(f)[0])):
-                    if tok not in sub.columns and tok not in df.columns:
-                        sub = sub.withColumn(
-                            tok,
-                            F.lit(False)
-                            if tok.endswith("__islit")
-                            else F.lit(None).cast("string"),
-                        )
+            merged = frame_resolver(set(df.columns) | set(sub.columns))
             # rename every body column colliding with the outer frame
             # (shared vars, their companions, the unit marker) so the
             # join condition can address both sides
@@ -1906,33 +1399,23 @@ def _eval_where(graph, q: Query, bgp_fn=None, skip_filters=False, known_vars=Non
                 *[F.col(c).alias(ren.get(c, c)) for c in sub.columns]
             )
             sub_cols = set(sub.columns)
-            cond = F.lit(True)
-            for c in shared:
-                eq_ = F.col(c) == F.col(f"__ex_{c}")
-                if c in compat:
-                    n = F.lit(False)
-                    if c in maybe_unbound:
-                        n = n | F.col(c).isNull()
-                    if c in sub_maybe:
-                        n = n | F.col(f"__ex_{c}").isNull()
-                    cond = cond & (n | eq_)
-                else:
-                    cond = cond & eq_
+            cond = _compat_cond(shared, compat, maybe_unbound, sub_maybe, "__ex_")
+
+            def exists_col(name):
+                # a shared var means the body's binding (≡ the outer one
+                # when both are bound — the join condition equates them;
+                # the body's when the outer is unbound) and the body's
+                # companions; outer-only vars resolve from the left side
+                base, suf = split_companion(name)
+                if base in shared:
+                    if suf is None:
+                        return F.coalesce(F.col(f"__ex_{base}"), F.col(base))
+                    if f"__ex_{name}" in sub_cols:
+                        return F.col(f"__ex_{name}")
+                return merged(name)
+
             for f in efilts:
-                # substitution: a shared var reference means the body's
-                # binding (≡ the outer one when both bound — the join
-                # condition equates them; the body's when the outer is
-                # unbound); outer-only vars resolve from the left side
-                # untouched.  String constants are masked first.
-                fm, _strs = _mask_strings(f)
-                for c in shared:
-                    fm = re.sub(rf"\b{re.escape(c)}\b", "\x01S\x01", fm)
-                    for suf in ("__dt", "__lang", "__islit"):
-                        tok = f"{c}{suf}"
-                        if f"__ex_{tok}" in sub_cols:
-                            fm = re.sub(rf"\b{tok}\b", f"__ex_{tok}", fm)
-                    fm = fm.replace("\x01S\x01", f"coalesce(__ex_{c}, {c})")
-                cond = cond & F.expr(_unmask_strings(fm, _strs))
+                cond = cond & compile_expr(f, exists_col)
             df = df.join(sub, cond, how)
         elif shared:
             df = df.join(sub.select(*shared), on=shared, how=how)
@@ -1951,23 +1434,30 @@ def _eval_where(graph, q: Query, bgp_fn=None, skip_filters=False, known_vars=Non
         compat = [c for c in shared if c in maybe_unbound or c in sub_maybe]
         if compat:
             sub = sub.select(*[F.col(c).alias(f"__mn_{c}") for c in shared])
-            cond, dom = F.lit(True), F.lit(False)
+            cond = _compat_cond(shared, compat, maybe_unbound, sub_maybe, "__mn_")
+            dom = F.lit(False)
             for c in shared:
-                eq_ = F.col(c) == F.col(f"__mn_{c}")
-                if c in compat:
-                    n = F.lit(False)
-                    if c in maybe_unbound:
-                        n = n | F.col(c).isNull()
-                    if c in sub_maybe:
-                        n = n | F.col(f"__mn_{c}").isNull()
-                    cond = cond & (n | eq_)
-                else:
-                    cond = cond & eq_
                 dom = dom | (F.col(c).isNotNull() & F.col(f"__mn_{c}").isNotNull())
             df = df.join(sub, cond & dom, "left_anti")
         elif shared:
             df = df.join(sub.select(*shared), on=shared, how="left_anti")
     return df, maybe_unbound
+
+
+def _compat_cond(shared, compat, left_maybe, right_maybe, prefix: str):
+    """Join condition between shared vars and their ``prefix``-renamed
+    right copies: equality, or for a ``compat`` var either side may
+    leave unbound, unbound-or-equal (SPARQL compatibility)."""
+    cond = F.lit(True)
+    for c in shared:
+        eq_ = F.col(c) == F.col(prefix + c)
+        if c in compat:
+            if c in left_maybe:
+                eq_ = eq_ | F.col(c).isNull()
+            if c in right_maybe:
+                eq_ = eq_ | F.col(prefix + c).isNull()
+        cond = cond & eq_
+    return cond
 
 
 def _join_values(graph, df, maybe_unbound: set, vars_, rows) -> DataFrame:
@@ -2027,7 +1517,7 @@ def _execute_query(graph, q: Query, bgp_fn=None, known_vars=None) -> DataFrame:
         df = _unit_frame(graph)
     # trailing query-level VALUES: Join(P, ToMultiSet(data)) AFTER the
     # group pattern (18.2.2) — its vars were out of scope for the
-    # group's FILTERs (which saw them as unbound via _null_out_of_scope)
+    # group's FILTERs (which saw them as unbound via _in_scope)
     for vars_, rows in q.trailing_values:
         df = _join_values(graph, df, _maybe, vars_, rows)
 
@@ -2040,47 +1530,35 @@ def _execute_query(graph, q: Query, bgp_fn=None, known_vars=None) -> DataFrame:
         out = _describe_frame(graph, df, q.describe)
         return out.limit(q.limit) if q.limit is not None else out
 
-    # aggregation: GROUP BY keys + aggregate projections
-    aggs = [p for p in q.projections if p[0] == "agg"]
-    # HAVING and SELECT expressions may reference aggregates inline
-    # (HAVING (COUNT(?x) > 5), (ROUND(AVG(?x)) AS ?a), (SUM(?a)/COUNT(*)
-    # AS ?r)): inline calls become hidden agg columns, consumed after the
-    # groupBy and projected away
+    # aggregation: every aggregate call in a SELECT expression or a
+    # HAVING constraint — (COUNT(*) AS ?n), HAVING (SUM(?b * 2) > 3),
+    # (SUM(?a) / COUNT(*) AS ?r) — becomes a hidden agg column; a
+    # projection that IS one aggregate is computed under its alias
     hidden: list[tuple] = []
-
-    def _inline_aggs(h: str) -> str:
-        def rep(m):
-            alias = f"__h{len(hidden)}"
-            hidden.append((m.group(1).upper(), m.group(3), bool(m.group(2)), alias))
-            return alias
-
-        return re.sub(
-            r"\b(COUNT|SUM|AVG|MIN|MAX)\s*\(\s*(DISTINCT\s+)?(\w+|\*)\s*\)",
-            rep,
-            h,
-            flags=re.I,
-        )
-
-    having = [_inline_aggs(h) for h in q.having]
-    expr_projs = [
-        (_inline_aggs(sql), alias)
-        for _, sql, alias in (p for p in q.projections if p[0] == "expr")
-    ]
-    if aggs or q.group_by or hidden:
+    exprs = []
+    for _, tree, alias in (p for p in q.projections if p[0] == "expr"):
+        if isinstance(tree, tuple) and tree[0] == "agg":
+            hidden.append((alias, tree))
+        else:
+            exprs.append((tree, alias))
+    n_direct = len(hidden)
+    exprs = [(lift_aggregates(t, hidden), alias) for t, alias in exprs]
+    having = [lift_aggregates(h, hidden) for h in q.having]
+    if q.group_by or hidden:
         for _, name in (p for p in q.projections if p[0] == "var"):
             if name not in q.group_by:
                 raise SparqlError(f"?{name} in SELECT must appear in GROUP BY")
-        agg_cols = [_agg_column(*p[1:]) for p in aggs]
-        agg_cols += [_agg_column(fn, a, d, al) for fn, a, d, al in hidden]
+        col = frame_resolver(df.columns)
+        agg_cols = [_agg_column(node, col).alias(name) for name, node in hidden]
         df = df.groupBy(*q.group_by).agg(*agg_cols) if q.group_by else df.agg(*agg_cols)
         for h in having:
-            df = df.filter(F.expr(h))
+            df = df.filter(compile_expr(h, frame_resolver(df.columns)))
     # select expressions (post-aggregation when hidden agg columns exist)
-    for sql, alias in expr_projs:
-        df = _ensure_companions(df, sql)
-        df = df.withColumn(alias, F.expr(sql))
-    if hidden:
-        df = df.drop(*[al for _, _, _, al in hidden])
+    for tree, alias in exprs:
+        df = df.withColumn(alias, compile_expr(tree, frame_resolver(df.columns)))
+    df = df.drop(*[name for name, _ in hidden[n_direct:]])
+    # ORDER BY may name variables the projection drops
+    order_col = frame_resolver(df.columns) if q.order_by else None
 
     if q.variables:
         df = df.select(*q.variables)
@@ -2097,10 +1575,8 @@ def _execute_query(graph, q: Query, bgp_fn=None, known_vars=None) -> DataFrame:
     if q.distinct:
         df = df.distinct()
     if q.order_by:
-        # v is a plain variable name or a rewritten ASC()/DESC() expression
-        df = df.orderBy(
-            *[F.expr(v).desc() if d else F.expr(v).asc() for v, d in q.order_by]
-        )
+        keys = [compile_expr(t, order_col) for t, _ in q.order_by]
+        df = df.orderBy(*[k.desc() if d else k.asc() for k, (_, d) in zip(keys, q.order_by)])
     if q.offset:
         df = df.offset(q.offset)
     if q.limit is not None:

@@ -15,3 +15,17 @@ def spark():
 
 
 SF_SMALL = "/root/testdata/sf0.001"
+
+
+@pytest.fixture(scope="session")
+def eval_expr(spark):
+    """Evaluate one SPARQL expression (text) over each row of a small
+    frame → list of values, one per row."""
+    from ont_d2rq_spark.sparql_expr import as_tree, compile_expr, frame_resolver
+
+    def run(text, rows=((),), schema="_dummy int"):
+        df = spark.createDataFrame([tuple(r) or (0,) for r in rows], schema)
+        col = compile_expr(as_tree(text), frame_resolver(df.columns))
+        return [r[0] for r in df.select(col).collect()]
+
+    return run

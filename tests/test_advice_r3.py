@@ -1,6 +1,7 @@
 """Round-3 advisory fixes, pinned.
 
-1. _rewrite_builtins must not rewrite inside quoted string constants.
+1. Operators and builtin names inside quoted string constants stay
+   part of the constant.
 2. A query with only OPTIONAL groups (no basic patterns) returns the
    optional bindings, not one empty row.
 3. OPTIONAL with disjoint variable domains preserves left solutions
@@ -13,7 +14,7 @@ import pytest
 
 from ont_d2rq_spark.examples import tpch_mapping
 from ont_d2rq_spark.graph import VirtualGraph
-from ont_d2rq_spark.sparql import _rewrite_builtins, execute
+from ont_d2rq_spark.sparql import execute
 
 SF = "/root/testdata/sf0.001"
 XSD = "http://www.w3.org/2001/XMLSchema#"
@@ -24,24 +25,33 @@ def graph(spark):
     return VirtualGraph(tpch_mapping(SF), spark)
 
 
-# ---- 1: string constants survive the builtin/operator rewrites ----------
+# ---- 1: string constants stay constants ---------------------------------
 
 
-def test_rewrite_keeps_operators_inside_strings():
-    out = _rewrite_builtins("name = 'Tom&&Jerry'")
-    assert "'Tom&&Jerry'" in out and "AND" not in out
-    out = _rewrite_builtins('name != "Hello!World" && flag')
-    assert '"Hello!World"' in out and " AND " in out and "NOT" not in out.split('"')[2 - 1]
+def test_rewrite_keeps_operators_inside_strings(eval_expr):
+    # equality holds only if the constant survives verbatim
+    got = eval_expr("name = 'Tom&&Jerry'", [("Tom&&Jerry",), ("Tom",)], "name string")
+    assert got == [True, False]
+    got = eval_expr(
+        'name != "Hello!World" && flag',
+        [("Hello!World", True), ("x", True)],
+        "name string, flag boolean",
+    )
+    assert got == [False, True]
     # builtin-shaped text inside a literal is untouched
-    out = _rewrite_builtins("x = 'lang(y)' || bound(z)")
-    assert "'lang(y)'" in out and "(z IS NOT NULL)" in out and " OR " in out
+    got = eval_expr(
+        "x = 'lang(y)' || bound(z)",
+        [("lang(y)", None), ("other", None), ("other", "v")],
+        "x string, z string",
+    )
+    assert got == [True, False, True]
 
 
-def test_rewrite_regex_flags_and_masked_pattern():
-    out = _rewrite_builtins("regex(name, 'a&&b', 'i')")
-    assert out == "regexp_like(name, '(?i)a&&b')"
-    out = _rewrite_builtins("regex(name, \"^Cust\")")
-    assert out == 'regexp_like(name, "^Cust")'
+def test_rewrite_regex_flags_and_masked_pattern(eval_expr):
+    got = eval_expr("regex(name, 'a&&b', 'i')", [("xA&&By",), ("ab",)], "name string")
+    assert got == [True, False]
+    got = eval_expr('regex(name, "^Cust")', [("Customer#1",), ("cust",)], "name string")
+    assert got == [True, False]
 
 
 def test_filter_with_operator_chars_in_literal(graph):

@@ -5,11 +5,9 @@ import pytest
 from pyspark.sql import functions as F
 
 
-def test_date_accessors_zoned_literals(spark):
+def test_date_accessors_zoned_literals(eval_expr):
     """SPARQL 17.4.5 / XPath accessors return the component of the
     value's OWN timezone; the session-tz cast must not shift it."""
-    from ont_d2rq_spark.sparql import _rewrite_builtins
-
     cases = [
         ("HOURS('2011-01-10T14:45:13.815-05:00')", 14),
         ("MINUTES('2011-01-10T10:15:00+05:30')", 15),
@@ -19,16 +17,11 @@ def test_date_accessors_zoned_literals(spark):
         ("HOURS('2011-01-10T14:45:13')", 14),  # zone-less unchanged
         ("MONTH('1995-07-16')", 7),  # xsd:date unchanged
     ]
-    exprs = ", ".join(
-        f"{_rewrite_builtins(e)} AS c{i}" for i, (e, _) in enumerate(cases)
-    )
-    row = spark.sql(f"SELECT {exprs}").first()
-    for i, (e, want) in enumerate(cases):
-        assert row[f"c{i}"] == want, e
-    sec = _rewrite_builtins("SECONDS('2011-01-10T00:00:13.500-05:00')")
+    for e, want in cases:
+        assert eval_expr(e) == [want], e
     from decimal import Decimal
 
-    assert spark.sql(f"SELECT {sec} AS s").first()["s"] == Decimal("13.500")
+    assert eval_expr("SECONDS('2011-01-10T00:00:13.500-05:00')") == [Decimal("13.500")]
 
 
 def _chain_edges(spark, n=6):

@@ -723,13 +723,14 @@ def test_builtin_hashes_and_uuid(graph):
     assert rows[0]["u"] != rows[1]["u"]  # fresh per solution
 
 
-def test_builtin_tz_and_seconds():
-    from ont_d2rq_spark.sparql import _rewrite_builtins
-
-    e = _rewrite_builtins("TZ(?d) = 'Z' && SECONDS(?d) > 10")
-    assert "regexp_extract" in e and "date_format" in e
-    e2 = _rewrite_builtins("NOW() > ?d")
-    assert "current_timestamp()" in e2
+def test_builtin_tz_and_seconds(eval_expr):
+    got = eval_expr(
+        "TZ(?d) = 'Z' && SECONDS(?d) > 10",
+        [("2011-01-10T00:00:13Z",), ("2011-01-10T00:00:05Z",), ("2011-01-10T00:00:13-05:00",)],
+        "d string",
+    )
+    assert got == [True, False, False]
+    assert eval_expr("NOW() > ?d", [("2011-01-10T00:00:13Z",)], "d string") == [True]
 
 
 def test_builtin_datatype_lang_literal_is_langstring(graph):
